@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import logging
 import math
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Iterator, Optional
 
@@ -43,7 +44,8 @@ from .geometry import wkb as W
 from .geometry.crs import CRS, transform as crs_transform
 from .grid.geobox import GeoBox, GeoBoxMaker
 from .kernels.dtypes import is_numeric, minimize_dtype
-from .kernels.interpolate import GridInterpolator, interpolate_na
+from .kernels.interpolate import (GridInterpolator, interpolate_na,
+                                  nearest_interp)
 from .kernels.rasterize import (
     _multi_arange,
     batch_outline_cells,
@@ -52,6 +54,7 @@ from .kernels.rasterize import (
     edges_from_varying_rings,
     geometry_cells,
 )
+from .plans.halo import NO_GROUP, halo_resolve, margin_certified
 
 logger = logging.getLogger("geocube_spark")
 
@@ -463,7 +466,6 @@ def make_geocube(
     _emit_partials: bool = False,   # internal: keep aux bands (streaming)
     interp_method: Optional[str] = None,   # griddata: nearest|linear|cubic; radial: rbf function
     rescale: bool = False,
-    interp_engine: str = "auto",  # linear fit: auto|tiled|global
 ) -> GeoCube:
     """Rasterize a vector/document DataFrame into a chunked cube.
 
@@ -475,6 +477,13 @@ def make_geocube(
     ``rasterize_function``: 'image' (scanline burn, default —
     reference rasterize.py:67-133), 'points_griddata'
     (rasterize.py:136-191), 'points_radial' (rasterize.py:194-239).
+
+    Interpolators route by input size, never with ``rescale=True``:
+    above 150k points 'linear', 'nearest' and 'proximity' run
+    halo-tiled (plans/halo.py), as does radius-bounded IDW above 20k
+    points and ``interpolate_na_method='nearest'`` above 16M grid
+    cells; smaller inputs take the single-task / broadcast engines.
+    Linear values can differ by about 1e-12 across the 150k threshold.
     """
     from .extract import extract_vector_table_sql, validate_vector_df
 
@@ -625,7 +634,7 @@ def make_geocube(
         chunks = _interp_chunks(
             work, meas, gb_dict, in_crs.spec, tile_size, zoom, fill,
             rasterize_function, interp_method, rescale, filter_nan,
-            bool(group_by), interp_engine=interp_engine,
+            bool(group_by),
         )
     elif callable(rasterize_function):
         # reference §2.9 extension point: any f(*, geometry_array,
@@ -647,17 +656,10 @@ def make_geocube(
     if interpolate_na_method:
         # nearest is certifiably tileable (strict-margin halo rule);
         # the single-task path assembles the FULL band per (band,
-        # group), so auto routes big grids to the tiled form
-        use_tiled_na = (
-            interpolate_na_method == "nearest"
-            and interp_engine != "global"
-            and (interp_engine == "tiled"
-                 or (interp_engine == "auto"
-                     and geobox.width * geobox.height
-                     > _TILED_NA_MIN_CELLS))
-        )
-        if use_tiled_na:
-            cube = _interpolate_na_tiled(cube, interpolate_na_method)
+        # group), so big grids route to the tiled form
+        if (interpolate_na_method == "nearest"
+                and geobox.width * geobox.height > _TILED_NA_MIN_CELLS):
+            cube = _interpolate_na_tiled(cube)
         else:
             cube = _interpolate_na_cube(cube, interpolate_na_method)
     return cube
@@ -946,6 +948,20 @@ _CHUNK_FIELDS = [
     T.StructField("max_seq", T.LongType()),
 ]
 CHUNK_SCHEMA = T.StructType(_CHUNK_FIELDS)
+
+
+def _chunk_row(m, gkey, zoom, tile, band, n_geoms, min_seq, max_seq):
+    """One ``CHUNK_SCHEMA`` row, as a dict, for ``tile`` = (tile_id,
+    row0, col0, h, w) holding ``band``'s ``h * w`` values."""
+    tile_id, row0, col0, h, w = tile
+    return {
+        "measurement": m, "group_key": gkey, "zoom": zoom,
+        "tile_id": tile_id, "row0": row0, "col0": col0,
+        "h": h, "w": w, "values": np.ravel(band),
+        "n_geoms": n_geoms, "n_cells_burned": int(h * w),
+        "min_seq": min_seq, "max_seq": max_seq,
+    }
+
 
 # sparse partial chunks (salted burn stage 1 / streaming micro-batches):
 # only touched cells travel - cells (flat tile idx), vals, aux (touch
@@ -1356,11 +1372,11 @@ def _burn_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
 # interpolation strategy (points_griddata / points_radial)
 # ---------------------------------------------------------------------------
 
-# above this many scatter points the 'linear' method routes to the
-# halo-tiled certified fit (kernels/tiled_linear.py) instead of the
-# single-task global Delaunay — the last single-task stage retired
-# (verdict r04 item 1). Below it the global fit is cheap and keeps the
-# legacy (value-identical) code path.
+# above this many scatter points 'linear', 'nearest' and 'proximity'
+# route to their halo-tiled engines (no single-task fit, no broadcast
+# of the point set); below it one global fit task is cheaper than the
+# halo rounds. Linear values can differ by ~1e-12 across the threshold
+# (per-tile vs global barycentric arithmetic).
 _TILED_LINEAR_MIN_POINTS = 150_000
 
 # radius-bounded IDW: the broadcast-eval alternative pays
@@ -1373,17 +1389,44 @@ _TILED_IDW_MIN_POINTS = 20_000
 _TILED_NA_MIN_CELLS = 16_000_000
 
 
+@contextmanager
+def _forced_engine(engine: str):
+    """Route every size-routed interpolator to its ``'tiled'`` or
+    ``'global'`` engine inside the block, by patching the three
+    thresholds above. The seam for tests, oracle extras and benches
+    that must pin an engine; ``make_geocube`` itself only routes by
+    size."""
+    global _TILED_LINEAR_MIN_POINTS, _TILED_IDW_MIN_POINTS, \
+        _TILED_NA_MIN_CELLS
+    saved = (_TILED_LINEAR_MIN_POINTS, _TILED_IDW_MIN_POINTS,
+             _TILED_NA_MIN_CELLS)
+    lim = {"tiled": -1, "global": math.inf}[engine]
+    _TILED_LINEAR_MIN_POINTS = _TILED_IDW_MIN_POINTS = \
+        _TILED_NA_MIN_CELLS = lim
+    try:
+        yield
+    finally:
+        (_TILED_LINEAR_MIN_POINTS, _TILED_IDW_MIN_POINTS,
+         _TILED_NA_MIN_CELLS) = saved
+
+
+def _point_bucket(tile_size):
+    """Bucket edge (cells) of the tiled point interpolators: finer than
+    tiles, so a round-1 halo is a thin ring and the per-tile point count
+    stays ~points-in-tile + O(ring)."""
+    return max(8, tile_size // 4)
+
+
 def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
                             tile_size):
     """Shared front half of the tiled interpolators: decode + project
-    the scatter points ONCE (distributed) and bucket them on a grid
-    of ``tile_size // 4``-cell squares (finer than tiles, so halos
-    are thin rings). Returns (pts_df flattened, bc, nbr, nbc)."""
+    the scatter points ONCE (distributed) and bucket them on the
+    :func:`_point_bucket` grid. Returns the flattened points frame."""
     from .plans.flatten import _flat
 
     gb0 = GeoBox.from_dict(gb_dict)
     A = gb0.affine
-    bc = max(8, tile_size // 4)
+    bc = _point_bucket(tile_size)
     nbr = (gb0.height + bc - 1) // bc
     nbc = (gb0.width + bc - 1) // bc
 
@@ -1391,7 +1434,7 @@ def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
             else F.lit(None).cast("string"))
     src_rows = long_df.select(
         F.col("measurement"),
-        F.coalesce(gsel, F.lit("\x00")).alias("__g"),
+        F.coalesce(gsel, F.lit(NO_GROUP)).alias("__g"),
         "seq", "geometry_wkb",
         F.col("value").cast("double").alias("v"),
     )
@@ -1427,8 +1470,47 @@ def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
                 "bj": np.clip(col // bc, 0, nbc - 1).astype(np.int32),
             })
 
-    pts = src_rows.mapInPandas(_decode, schema=pt_schema).transform(_flat)
-    return pts, bc, nbr, nbc
+    return src_rows.mapInPandas(_decode, schema=pt_schema).transform(_flat)
+
+
+def _band_stats(pts, hulls=False):
+    """``{(measurement, __g): (n, min_seq, max_seq, hull)}`` of the
+    bucketed points, in one job: per-partition partials merged on the
+    driver. ``hull`` (the band's convex hull, as a hull of the
+    partition hulls) is computed only with ``hulls=True``."""
+    from .kernels.tiled_linear import convex_hull
+
+    schema = ("measurement string, __g string, n long, mn long, "
+              "mx long, hx array<double>, hy array<double>")
+
+    def _part(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = []
+            for (m, g), sub in pdf.groupby(["measurement", "__g"],
+                                           sort=False):
+                h = (convex_hull(sub["x"].values, sub["y"].values)
+                     if hulls else np.empty((0, 2)))
+                out.append({
+                    "measurement": m, "__g": g, "n": len(sub),
+                    "mn": int(sub["seq"].min()),
+                    "mx": int(sub["seq"].max()),
+                    "hx": h[:, 0], "hy": h[:, 1],
+                })
+            yield pd.DataFrame(out)
+
+    parts: dict = {}
+    for r in pts.mapInPandas(_part, schema=schema).collect():
+        parts.setdefault((r["measurement"], r["__g"]), []).append(r)
+    return {
+        k: (sum(r["n"] for r in rs), min(r["mn"] for r in rs),
+            max(r["mx"] for r in rs),
+            convex_hull(np.concatenate([r["hx"] for r in rs]),
+                        np.concatenate([r["hy"] for r in rs]))
+            if hulls else None)
+        for k, rs in parts.items()
+    }
 
 
 def _tiles_frame(spark, gb_dict, tile_size, bc, bands_df):
@@ -1453,101 +1535,74 @@ def _tiles_frame(spark, gb_dict, tile_size, bc, bands_df):
     )
 
 
+def _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom, grouped,
+                  label, make_eval, *, hulls=False, schedule=None):
+    """The plan of the three tiled point interpolators: bucket the
+    points, collect the band stats, then resolve every (band, tile)
+    through the halo engine with the callback ``make_eval(stats)``."""
+    spark = long_df.sparkSession
+    pts = _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
+                                  tile_size)
+    stats = _band_stats(pts, hulls)
+    if not stats:
+        # no points at all: the global path emits nothing either
+        return spark.createDataFrame([], CHUNK_SCHEMA)
+    bands_df = spark.createDataFrame(sorted(stats),
+                                     "measurement string, __g string")
+    bc = _point_bucket(tile_size)
+    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
+    meta = {k: (zoom, n, mn, mx) for k, (n, mn, mx, _) in stats.items()}
+    return halo_resolve(tiles, pts, gb_dict, bc, meta, make_eval(stats),
+                        schedule=schedule, label=label)
+
+
+def _margin_pad(gb):
+    # float slack of the strict-margin certificate: 1e-9 of the grid span
+    A = gb.affine
+    return 1e-9 * max(abs(A.a) * gb.width, abs(A.e) * gb.height, 1e-300)
+
+
 def _interp_idw_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
                       fill, grouped, method):
     """Distributed radius-bounded IDW — exact by construction, ONE
     round, no certificate: every cell's donors live within ``radius``
     of the cell, so a tile halo of ``radius`` (rounded up to whole
     buckets per axis) gathers every donor of every cell in the tile.
-    Plan: tile-to-bucket explode -> ONE left equi-join with the
-    bucketed points -> one grouped map per tile running the same
-    ``idw_interp`` kernel on its complete donor set (seq-sorted, so
-    the weighted sums accumulate in the global order up to the zeroed
-    out-of-radius terms — values match the broadcast path to float
-    round-off, the fill pattern exactly).
+    Each tile runs the same ``idw_interp`` kernel on its complete,
+    seq-sorted donor set, so the weighted sums accumulate in the global
+    order up to the zeroed out-of-radius terms: values match the
+    broadcast path to float round-off, the fill pattern exactly.
 
     The broadcast path ships ALL points to every tile and pays
     O(cells x points); this path pays O(cells x local donors) — the
     scale form of gdal_grid invdist with a search radius."""
-    import math as _math
-
     from .kernels.interpolate import _parse_idw, idw_interp
-    from .plans.flatten import _flat
 
     p = _parse_idw(method)
-    radius = float(p["radius"])
-    spark = long_df.sparkSession
-    gb0 = GeoBox.from_dict(gb_dict)
-    A = gb0.affine
-    pts, bc, nbr, nbc = _decode_bucketed_points(
-        long_df, gb_dict, src_spec, grouped, tile_size
-    )
-    stats = {
-        (r["measurement"], r["__g"]): (int(r["n"]), int(r["mn"]),
-                                       int(r["mx"]))
-        for r in pts.groupBy("measurement", "__g").agg(
-            F.count(F.lit(1)).alias("n"), F.min("seq").alias("mn"),
-            F.max("seq").alias("mx")).collect()
-    }
-    if not stats:
-        # no points at all: the global path emits nothing either
-        return spark.createDataFrame([], CHUNK_SCHEMA)
-    bands_df = spark.createDataFrame(
-        [(m, g) for (m, g) in sorted(stats)],
-        "measurement string, __g string",
-    )
-    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
+    A = GeoBox.from_dict(gb_dict).affine
+    bc = _point_bucket(tile_size)
+    halo = (max(1, math.ceil(p["radius"] / (bc * abs(A.e)))),
+            max(1, math.ceil(p["radius"] / (bc * abs(A.a)))))
 
-    r_i = max(1, _math.ceil(radius / (bc * abs(A.e))))
-    r_j = max(1, _math.ceil(radius / (bc * abs(A.a))))
-    cand = (
-        tiles
-        .withColumn("bi", F.explode(F.sequence(
-            F.greatest(F.lit(0), F.col("b0i") - F.lit(r_i)),
-            F.least(F.lit(nbr - 1), F.col("b1i") + F.lit(r_i)))))
-        .withColumn("bj", F.explode(F.sequence(
-            F.greatest(F.lit(0), F.col("b0j") - F.lit(r_j)),
-            F.least(F.lit(nbc - 1), F.col("b1j") + F.lit(r_j)))))
-        .withColumn("bi", F.col("bi").cast("int"))
-        .withColumn("bj", F.col("bj").cast("int"))
-    )
-    joined = cand.join(pts, ["measurement", "__g", "bi", "bj"], "left")
+    def _make(stats):
+        def _idw(t, donors, gx, gy, rect):
+            sub = donors.sort_values("seq", kind="mergesort")
+            gxm, gym = np.meshgrid(gx, gy)
+            return idw_interp(
+                sub["x"].values, sub["y"].values, sub["v"].values,
+                gxm.ravel(), gym.ravel(), power=p["power"],
+                smoothing=p["smoothing"], radius=p["radius"],
+                min_points=p["min_points"], fill=fill,
+            ), True
 
-    out_cols = [f.name for f in _CHUNK_FIELDS]
-    tkeys = ["measurement", "__g", "tile_id", "row0", "col0", "h", "w"]
+        return _idw
 
-    def _eval(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        m, g, tile_id, row0, col0, h, w = key
-        n_g, mn, mx = stats[(m, g)]
-        gb = GeoBox.from_dict(gb_dict)
-        coords = gb.coords()
-        gx = coords["x"][col0: col0 + w]
-        gy = coords["y"][row0: row0 + h]
-        sub = pdf[pdf["x"].notna()].sort_values("seq", kind="mergesort")
-        gxm, gym = np.meshgrid(gx, gy)
-        band = idw_interp(
-            sub["x"].values, sub["y"].values, sub["v"].values,
-            gxm.ravel(), gym.ravel(), power=p["power"],
-            smoothing=p["smoothing"], radius=radius,
-            min_points=p["min_points"], fill=fill,
-        )
-        gkey = None if g == "\x00" else g
-        return pd.DataFrame([{
-            "measurement": m, "group_key": gkey, "zoom": zoom,
-            "tile_id": tile_id, "row0": row0, "col0": col0,
-            "h": h, "w": w, "values": band,
-            "n_geoms": n_g, "n_cells_burned": int(h * w),
-            "min_seq": mn, "max_seq": mx,
-        }], columns=out_cols)
-
-    return joined.groupBy(*tkeys).applyInPandas(
-        _eval, schema=CHUNK_SCHEMA
-    )
+    return _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom,
+                         grouped, "tiled-idw", _make, schedule=[halo])
 
 
 def _interp_nearest_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
-                          fill, grouped, max_rounds: int = 5,
-                          mode: str = "nearest"):
+                          fill, grouped, mode: str = "nearest"):
     """Distributed nearest-neighbor interpolation (and its
     ``proximity`` distance-raster sibling) with NO broadcast of the
     point set: per-tile halo gathers with the textbook grow-until-
@@ -1556,380 +1611,61 @@ def _interp_nearest_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
     cannot be beaten (or tied) by any ungathered point, so its value
     is the global answer bit-for-bit (ties resolve by lowest seq in
     both paths; the strict margin keeps a just-outside equidistant
-    donor from flipping a tie). Uncertified cells double the halo;
-    the final round gathers the full band.
+    donor from flipping a tie).
 
     The broadcast-eval alternative ships ALL points to every tile;
     this path's per-tile cost is O(cells + local donors)."""
-    from .plans.flatten import _flat
+    pad = _margin_pad(GeoBox.from_dict(gb_dict))
 
-    spark = long_df.sparkSession
-    gb0 = GeoBox.from_dict(gb_dict)
-    A = gb0.affine
-    pts, bc, nbr, nbc = _decode_bucketed_points(
-        long_df, gb_dict, src_spec, grouped, tile_size
-    )
-    stats = {
-        (r["measurement"], r["__g"]): (int(r["n"]), int(r["mn"]),
-                                       int(r["mx"]))
-        for r in pts.groupBy("measurement", "__g").agg(
-            F.count(F.lit(1)).alias("n"), F.min("seq").alias("mn"),
-            F.max("seq").alias("mx")).collect()
-    }
-    if not stats:
-        return spark.createDataFrame([], CHUNK_SCHEMA)
-    bands_df = spark.createDataFrame(
-        [(m, g) for (m, g) in sorted(stats)],
-        "measurement string, __g string",
-    )
-    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
-
-    out_cols = [f.name for f in _CHUNK_FIELDS]
-    eval_schema = T.StructType(
-        list(CHUNK_SCHEMA.fields)
-        + [T.StructField("__g", T.StringType()),
-           T.StructField("b0i", T.IntegerType()),
-           T.StructField("b1i", T.IntegerType()),
-           T.StructField("b0j", T.IntegerType()),
-           T.StructField("b1j", T.IntegerType()),
-           T.StructField("ok", T.BooleanType())]
-    )
-    tkeys = ["measurement", "__g", "tile_id", "row0", "col0", "h", "w",
-             "b0i", "b1i", "b0j", "b1j"]
-    span = max(abs(A.a) * gb0.width, abs(A.e) * gb0.height, 1e-300)
-    pad = 1e-9 * span
-
-    def _mk_eval(r):
-        from .kernels.interpolate import nearest_interp
-
-        def _eval(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            m, g, tile_id, row0, col0, h, w, b0i, b1i, b0j, b1j = key
-            n_g, mn, mx = stats[(m, g)]
-            gb = GeoBox.from_dict(gb_dict)
-            coords = gb.coords()
-            gx = coords["x"][col0: col0 + w]
-            gy = coords["y"][row0: row0 + h]
+    def _make(stats):
+        def _nearest(t, donors, gx, gy, rect):
             gxm, gym = np.meshgrid(gx, gy)
             qx, qy = gxm.ravel(), gym.ravel()
-            sub = pdf.sort_values("seq", kind="mergesort")
-            px = sub["x"].values
-            py = sub["y"].values
+            if not len(donors):
+                return np.full(qx.shape, fill, dtype=np.float64), False
+            sub = donors.sort_values("seq", kind="mergesort")
+            px, py = sub["x"].values, sub["y"].values
             idx = nearest_interp(
                 px, py, np.arange(len(px), dtype=np.float64), qx, qy
             ).astype(np.int64)
             d = np.hypot(qx - px[idx], qy - py[idx])
-            lo_i, hi_i = b0i - r, b1i + r
-            lo_j, hi_j = b0j - r, b1j + r
-            xe = (A.c + A.a * lo_j * bc, A.c + A.a * (hi_j + 1) * bc)
-            ye = (A.f + A.e * lo_i * bc, A.f + A.e * (hi_i + 1) * bc)
-            x0, x1 = min(xe), max(xe)
-            y0, y1 = min(ye), max(ye)
-            if lo_j <= 0:
-                x0 = -np.inf if A.a > 0 else x0
-                x1 = np.inf if A.a < 0 else x1
-            if hi_j >= nbc - 1:
-                x1 = np.inf if A.a > 0 else x1
-                x0 = -np.inf if A.a < 0 else x0
-            if lo_i <= 0:
-                y1 = np.inf if A.e < 0 else y1
-                y0 = -np.inf if A.e > 0 else y0
-            if hi_i >= nbr - 1:
-                y0 = -np.inf if A.e < 0 else y0
-                y1 = np.inf if A.e > 0 else y1
-            margin = np.minimum.reduce([
-                qx - x0, x1 - qx, qy - y0, y1 - qy
-            ])
-            ok = bool(len(px) == n_g or (d < margin - pad).all())
-            band = d if mode == "proximity" else \
-                sub["v"].values[idx]
-            gkey = None if g == "\x00" else g
-            return pd.DataFrame([{
-                "measurement": m, "group_key": gkey, "zoom": zoom,
-                "tile_id": tile_id, "row0": row0, "col0": col0,
-                "h": h, "w": w, "values": band,
-                "n_geoms": n_g, "n_cells_burned": int(h * w),
-                "min_seq": mn, "max_seq": mx,
-                "__g": g, "b0i": b0i, "b1i": b1i,
-                "b0j": b0j, "b1j": b1j, "ok": ok,
-            }], columns=out_cols + ["__g", "b0i", "b1i", "b0j",
-                                    "b1j", "ok"])
+            ok = (len(px) == stats[(t.m, t.g)][0]
+                  or margin_certified(qx, qy, d, rect, pad))
+            return (d if mode == "proximity" else sub["v"].values[idx]), ok
 
-        return _eval
+        return _nearest
 
-    unresolved = tiles.transform(_flat)
-    resolved = []
-    r = 1
-    r_cover = max(nbr, nbc)
-    for round_i in range(max_rounds):
-        if round_i == max_rounds - 1:
-            r = r_cover
-        cand = (
-            unresolved
-            .withColumn("bi", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("b0i") - F.lit(r)),
-                F.least(F.lit(nbr - 1), F.col("b1i") + F.lit(r)))))
-            .withColumn("bj", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("b0j") - F.lit(r)),
-                F.least(F.lit(nbc - 1), F.col("b1j") + F.lit(r)))))
-            .withColumn("bi", F.col("bi").cast("int"))
-            .withColumn("bj", F.col("bj").cast("int"))
-        )
-        joined = cand.join(pts, ["measurement", "__g", "bi", "bj"])
-        out = joined.groupBy(*tkeys).applyInPandas(
-            _mk_eval(r), schema=eval_schema
-        ).transform(_flat)
-        resolved.append(out.filter(F.col("ok")).select(*out_cols))
-        solved = out.filter(F.col("ok")).select(*tkeys)
-        unresolved = unresolved.join(
-            solved, tkeys, "left_anti"
-        ).transform(_flat)
-        n_left = unresolved.count()
-        logger.debug(
-            "tiled-nearest round %d (halo r=%d buckets): %d tiles "
-            "unresolved", round_i + 1, r, n_left,
-        )
-        if n_left == 0:
-            break
-        r *= 2
-
-    final = resolved[0]
-    for df in resolved[1:]:
-        final = final.unionByName(df)
-    return final
+    return _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom,
+                         grouped, "tiled-nearest", _make)
 
 
 def _interp_linear_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
-                         fill, grouped, max_rounds: int = 5):
+                         fill, grouped):
     """Distributed linear (Delaunay barycentric) interpolation with NO
     single-task stage: per-tile local triangulations over halo point
     sets, certified cell-by-cell against the global answer
-    (kernels/tiled_linear.py docstring has the two certificates).
+    (kernels/tiled_linear.py docstring has the two certificates). The
+    only driver-side materializations are the per-band hull/stat rows
+    (O(hull) each) and the halo loop's per-round unresolved count."""
+    from .kernels.tiled_linear import tile_linear_certified
 
-    Plan shape per round: tiles explode to their candidate halo
-    buckets -> ONE equi-join with the bucketed points -> one grouped
-    map per tile (fit + evaluate + certify). Buckets are FINER than
-    tiles (tile_size // 4 cells) so a round-1 halo is a thin ring
-    rather than a full neighbor-tile border — the per-tile point count
-    stays ~points-in-tile + O(ring), keeping total triangulation work
-    O(n) instead of 9x n. Uncertified tiles double the halo; the last
-    round gathers the full band (R = the whole plane), so termination
-    with global-exact values is unconditional. The only driver-side
-    materializations are the per-band hull/stat rows (O(hull) each)
-    and the per-round unresolved count.
-    """
-    import pickle
-
-    from .kernels.tiled_linear import convex_hull, tile_linear_certified
-    from .plans.flatten import _flat
-
-    spark = long_df.sparkSession
-    gb0 = GeoBox.from_dict(gb_dict)
-    A = gb0.affine
-    n_tiles, ntx, nty = gb0.n_tiles(tile_size)
-    H, Wd = gb0.height, gb0.width
-    pts, bc, nbr, nbc = _decode_bucketed_points(
-        long_df, gb_dict, src_spec, grouped, tile_size
-    )
-
-    # per-band stats + convex hull: per-partition hulls (tiny) merged
-    # on the driver — the classic distributed-hull reduce
-    hull_schema = ("measurement string, __g string, hx array<double>, "
-                   "hy array<double>, n long, mn long, mx long")
-
-    def _phull(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for (m, g), sub in pdf.groupby(["measurement", "__g"],
-                                           sort=False):
-                h = convex_hull(sub["x"].values, sub["y"].values)
-                out.append({
-                    "measurement": m, "__g": g,
-                    "hx": h[:, 0], "hy": h[:, 1], "n": len(sub),
-                    "mn": int(sub["seq"].min()),
-                    "mx": int(sub["seq"].max()),
-                })
-            yield pd.DataFrame(out)
-
-    bands = {}
-    for r_ in pts.mapInPandas(_phull, schema=hull_schema).collect():
-        key = (r_["measurement"], r_["__g"])
-        hx, hy = np.asarray(r_["hx"]), np.asarray(r_["hy"])
-        if key in bands:
-            phx, phy, n, mn, mx = bands[key]
-            bands[key] = (np.concatenate([phx, hx]),
-                          np.concatenate([phy, hy]),
-                          n + r_["n"], min(mn, r_["mn"]),
-                          max(mx, r_["mx"]))
-        else:
-            bands[key] = (hx, hy, r_["n"], r_["mn"], r_["mx"])
-    stats = {
-        k: (convex_hull(v[0], v[1]), int(v[2]), int(v[3]), int(v[4]))
-        for k, v in bands.items()
-    }
-    sc = spark.sparkContext
-    stats_b = sc.broadcast(pickle.dumps(stats, protocol=4))
-
-    # distributed tile table: bands x tiles, no driver tile list
-    band_rows = [(m, g) for (m, g) in sorted(stats)]
-    bands_df = spark.createDataFrame(
-        band_rows, "measurement string, __g string"
-    )
-    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
-
-    out_cols = [f.name for f in _CHUNK_FIELDS]
-    eval_schema = T.StructType(
-        list(CHUNK_SCHEMA.fields)
-        + [T.StructField("__g", T.StringType()),
-           T.StructField("ti", T.IntegerType()),
-           T.StructField("tj", T.IntegerType()),
-           T.StructField("b0i", T.IntegerType()),
-           T.StructField("b1i", T.IntegerType()),
-           T.StructField("b0j", T.IntegerType()),
-           T.StructField("b1j", T.IntegerType()),
-           T.StructField("ok", T.BooleanType())]
-    )
-    tkeys = ["measurement", "__g", "tile_id", "row0", "col0", "h", "w",
-             "ti", "tj", "b0i", "b1i", "b0j", "b1j"]
-
-    def _mk_eval(r):
-        def _eval(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            (m, g, tile_id, row0, col0, h, w, ti, tj,
-             b0i, b1i, b0j, b1j) = key
-            hull, n_g, mn, mx = pickle.loads(stats_b.value)[(m, g)]
-            gb = GeoBox.from_dict(gb_dict)
-            coords = gb.coords()
-            gx = coords["x"][col0: col0 + w]
-            gy = coords["y"][row0: row0 + h]
-            lo_i, hi_i = b0i - r, b1i + r
-            lo_j, hi_j = b0j - r, b1j + r
-            # gathered region: union of the candidate buckets' rects;
-            # clamped edge buckets are unbounded on their outer side
-            xe = (A.c + A.a * lo_j * bc, A.c + A.a * (hi_j + 1) * bc)
-            ye = (A.f + A.e * lo_i * bc, A.f + A.e * (hi_i + 1) * bc)
-            x0, x1 = min(xe), max(xe)
-            y0, y1 = min(ye), max(ye)
-            if lo_j <= 0:
-                x0 = -np.inf if A.a > 0 else x0
-                x1 = np.inf if A.a < 0 else x1
-            if hi_j >= nbc - 1:
-                x1 = np.inf if A.a > 0 else x1
-                x0 = -np.inf if A.a < 0 else x0
-            if lo_i <= 0:
-                y1 = np.inf if A.e < 0 else y1
-                y0 = -np.inf if A.e > 0 else y0
-            if hi_i >= nbr - 1:
-                y0 = -np.inf if A.e < 0 else y0
-                y1 = np.inf if A.e > 0 else y1
-            sub = pdf.sort_values("seq", kind="mergesort")
-            band, ok = tile_linear_certified(
+    def _make(stats):
+        def _linear(t, donors, gx, gy, rect):
+            n_g, _, _, hull = stats[(t.m, t.g)]
+            sub = donors.sort_values("seq", kind="mergesort")
+            return tile_linear_certified(
                 sub["x"].values, sub["y"].values, sub["v"].values,
-                gx, gy, (x0, x1, y0, y1), hull,
-                n_global=n_g, fill=fill,
-            )
-            gkey = None if g == "\x00" else g
-            return pd.DataFrame([{
-                "measurement": m, "group_key": gkey, "zoom": zoom,
-                "tile_id": tile_id, "row0": row0, "col0": col0,
-                "h": h, "w": w, "values": band.ravel(),
-                "n_geoms": n_g, "n_cells_burned": int(h * w),
-                "min_seq": mn, "max_seq": mx,
-                "__g": g, "ti": ti, "tj": tj,
-                "b0i": b0i, "b1i": b1i, "b0j": b0j, "b1j": b1j,
-                "ok": bool(ok),
-            }], columns=out_cols + ["__g", "ti", "tj", "b0i", "b1i",
-                                    "b0j", "b1j", "ok"])
-
-        return _eval
-
-    # zero-point bands: the global fit is all-fill; emit directly
-    zero_bands = [k for k, v in stats.items() if v[1] == 0]
-    resolved = []
-    if zero_bands or not stats:
-        def _fill_tile(key, pdf):
-            m, g, tile_id, row0, col0, h, w, ti, tj = key
-            gkey = None if g == "\x00" else g
-            return pd.DataFrame([{
-                "measurement": m, "group_key": gkey, "zoom": zoom,
-                "tile_id": tile_id, "row0": row0, "col0": col0,
-                "h": h, "w": w,
-                "values": np.full(h * w, fill, dtype=np.float64),
-                "n_geoms": 0, "n_cells_burned": int(h * w),
-                "min_seq": -1, "max_seq": -1,
-            }], columns=out_cols)
-
-        zdf = spark.createDataFrame(
-            [(m, g) for m, g in zero_bands],
-            "measurement string, __g string",
-        ) if zero_bands else None
-        if zdf is not None:
-            resolved.append(
-                tiles.join(F.broadcast(zdf), ["measurement", "__g"])
-                .groupBy(*tkeys).applyInPandas(_fill_tile,
-                                               schema=CHUNK_SCHEMA)
+                gx, gy, rect, hull, n_global=n_g, fill=fill,
             )
 
-    unresolved = tiles
-    if zero_bands:
-        unresolved = tiles.join(
-            F.broadcast(spark.createDataFrame(
-                [(m, g) for m, g in zero_bands],
-                "measurement string, __g string")),
-            ["measurement", "__g"], "left_anti",
-        )
-    unresolved = unresolved.transform(_flat)
+        return _linear
 
-    r = 1
-    r_cover = max(nbr, nbc)  # gathers every bucket from any tile
-    for round_i in range(max_rounds):
-        if round_i == max_rounds - 1:
-            r = r_cover
-        cand = (
-            unresolved
-            .withColumn(
-                "bi",
-                F.explode(F.sequence(
-                    F.greatest(F.lit(0), F.col("b0i") - F.lit(r)),
-                    F.least(F.lit(nbr - 1), F.col("b1i") + F.lit(r)),
-                )))
-            .withColumn(
-                "bj",
-                F.explode(F.sequence(
-                    F.greatest(F.lit(0), F.col("b0j") - F.lit(r)),
-                    F.least(F.lit(nbc - 1), F.col("b1j") + F.lit(r)),
-                )))
-            .withColumn("bi", F.col("bi").cast("int"))
-            .withColumn("bj", F.col("bj").cast("int"))
-        )
-        joined = cand.join(pts, ["measurement", "__g", "bi", "bj"])
-        out = joined.groupBy(*tkeys).applyInPandas(
-            _mk_eval(r), schema=eval_schema
-        ).transform(_flat)
-        resolved.append(out.filter(F.col("ok")).select(*out_cols))
-        solved = out.filter(F.col("ok")).select(*tkeys)
-        unresolved = unresolved.join(
-            solved, tkeys, "left_anti"
-        ).transform(_flat)
-        n_left = unresolved.count()
-        logger.debug(
-            "tiled-linear round %d (halo r=%d buckets): %d tiles "
-            "unresolved", round_i + 1, r, n_left,
-        )
-        if n_left == 0:
-            break
-        r *= 2
+    return _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom,
+                         grouped, "tiled-linear", _make, hulls=True)
 
-    if not resolved:  # no bands at all (empty input)
-        return spark.createDataFrame([], CHUNK_SCHEMA)
-    final = resolved[0]
-    for df in resolved[1:]:
-        final = final.unionByName(df)
-    return final
 
 def _interp_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
-                   function, method, rescale, filter_nan, grouped,
-                   interp_engine: str = "auto"):
+                   function, method, rescale, filter_nan, grouped):
     """Global interpolators: melt to (group, measurement) long form, one
     task per band computes the full grid tile-by-tile (bounded memory),
     parallel across groups x measurements (SURVEY.md §2.8)."""
@@ -1952,55 +1688,38 @@ def _interp_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
     if filter_nan:
         long_df = long_df.filter(F.col("value").isNotNull())
 
-    # linear is locally determined -> the halo-tiled certified fit has
-    # no single-task stage at all. 'auto' keeps small inputs on the
-    # (value-identical) global path where one fit task is cheaper than
-    # the halo machinery; 'tiled' forces it (tests / known-large runs);
-    # 'global' opts out. rescale couples the triangulation to the
-    # global bbox transform and stays on the global path.
-    if (function == "points_griddata" and method == "linear"
-            and not rescale and interp_engine != "global"):
-        use_tiled = interp_engine == "tiled" or (
-            interp_engine == "auto"
-            and long_df.count() > _TILED_LINEAR_MIN_POINTS
-        )
-        if use_tiled:
+    # size-based routing to the halo-tiled engines (plans/halo.py): no
+    # single-task fit, no broadcast of the point set. Small inputs stay
+    # on the global path, where one fit task is cheaper than the halo
+    # rounds. rescale couples the fit to the global bbox transform and
+    # always stays global.
+    if function == "points_griddata" and not rescale:
+        from .kernels.interpolate import _parse_idw
+
+        # linear: per-tile Delaunay, certified cell by cell
+        if (method == "linear"
+                and long_df.count() > _TILED_LINEAR_MIN_POINTS):
             return _interp_linear_tiled(
                 long_df, gb_dict, src_spec, tile_size, zoom, fill,
                 grouped,
             )
-    # nearest / proximity: halo-grown tiled execution with the
-    # strict-margin certificate — no broadcast of the point set
-    if (function == "points_griddata"
-            and method in ("nearest", "proximity")
-            and not rescale and interp_engine != "global"):
-        use_tiled = interp_engine == "tiled" or (
-            interp_engine == "auto"
-            and long_df.count() > _TILED_LINEAR_MIN_POINTS
-        )
-        if use_tiled:
+        # nearest / proximity: the strict-margin certificate
+        if (method in ("nearest", "proximity")
+                and long_df.count() > _TILED_LINEAR_MIN_POINTS):
             return _interp_nearest_tiled(
                 long_df, gb_dict, src_spec, tile_size, zoom, fill,
                 grouped, mode=method,
             )
-    # radius-bounded IDW is exactly tileable (donors live within the
-    # radius), one round, no certificate needed; the broadcast path
-    # pays O(cells x ALL points), so the auto threshold is low
-    if (function == "points_griddata" and method
-            and method.split(":", 1)[0] in ("idw", "invdist")
-            and not rescale and interp_engine != "global"):
-        from .kernels.interpolate import _parse_idw
-
-        if _parse_idw(method)["radius"] is not None:
-            use_tiled = interp_engine == "tiled" or (
-                interp_engine == "auto"
-                and long_df.count() > _TILED_IDW_MIN_POINTS
+        # radius-bounded IDW is exactly tileable (donors live within
+        # the radius): one round, no certificate; the broadcast path
+        # pays O(cells x ALL points), so its threshold is low
+        if (method.split(":", 1)[0] in ("idw", "invdist")
+                and _parse_idw(method)["radius"] is not None
+                and long_df.count() > _TILED_IDW_MIN_POINTS):
+            return _interp_idw_tiled(
+                long_df, gb_dict, src_spec, tile_size, zoom, fill,
+                grouped, method,
             )
-            if use_tiled:
-                return _interp_idw_tiled(
-                    long_df, gb_dict, src_spec, tile_size, zoom,
-                    fill, grouped, method,
-                )
 
     def _fit_model(pdf: pd.DataFrame):
         """Decode + reproject the band's points and fit the globally-
@@ -2033,16 +1752,6 @@ def _interp_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
             function, method, px, py, vals, fill=fill, rescale=rescale,
         )
 
-    def _chunk_row(m, gkey, tile, band, n_geoms, min_seq, max_seq):
-        tile_id, row0, col0, h, w = tile
-        return {
-            "measurement": m, "group_key": gkey, "zoom": zoom,
-            "tile_id": tile_id, "row0": row0, "col0": col0,
-            "h": h, "w": w, "values": band.ravel(),
-            "n_geoms": n_geoms, "n_cells_burned": int(h * w),
-            "min_seq": min_seq, "max_seq": max_seq,
-        }
-
     out_cols = [f.name for f in _CHUNK_FIELDS]
 
     def _interp(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2059,7 +1768,8 @@ def _interp_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
             gx = coords["x"][col0 : col0 + w]
             gy = coords["y"][row0 : row0 + h]
             out.append(
-                _chunk_row(m, gkey, tile, model(gx, gy), len(pdf), mn, mx)
+                _chunk_row(m, gkey, zoom, tile, model(gx, gy), len(pdf),
+                           mn, mx)
             )
         return pd.DataFrame(out, columns=out_cols)
 
@@ -2159,8 +1869,7 @@ def _interp_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
                     gy = coords["y"][r.row0 : r.row0 + r.h]
                     out.append(_chunk_row(
                         r.measurement,
-                        r.group_key if r.group_key is not None else None,
-                        (r.tile_id, r.row0, r.col0, r.h, r.w),
+                        r.group_key, zoom, (r.tile_id, r.row0, r.col0, r.h, r.w),
                         model(gx, gy), r.n_geoms, r.min_seq, r.max_seq,
                     ))
                 yield pd.DataFrame(out, columns=out_cols)
@@ -2239,26 +1948,15 @@ def _custom_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
                 [], columns=[f.name for f in _CHUNK_FIELDS]
             )
         band = np.asarray(band, dtype=np.float64)
+        mn = int(pdf["seq"].min()) if len(pdf) else -1
+        mx = int(pdf["seq"].max()) if len(pdf) else -1
         out = []
-        for tile_id, row0, col0, h, w in gb.tile_grid(tile_size):
-            out.append(
-                {
-                    "measurement": m,
-                    "group_key": gkey,
-                    "zoom": zoom,
-                    "tile_id": tile_id,
-                    "row0": row0,
-                    "col0": col0,
-                    "h": h,
-                    "w": w,
-                    "values": band[row0:row0 + h, col0:col0 + w].ravel(),
-                    "n_geoms": len(pdf),
-                    "n_cells_burned": int(h * w),
-                    "min_seq": int(pdf["seq"].min()) if len(pdf) else -1,
-                    "max_seq": int(pdf["seq"].max()) if len(pdf) else -1,
-                }
-            )
-        return pd.DataFrame(out, columns=[f.name for f in _CHUNK_FIELDS])
+        for tile in gb.tile_grid(tile_size):
+            _, row0, col0, h, w = tile
+            out.append(_chunk_row(m, gkey, zoom, tile,
+                                  band[row0:row0 + h, col0:col0 + w],
+                                  len(pdf), mn, mx))
+        return pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
     keys = ["measurement", "group_key"] if grouped else ["measurement"]
     sc = long_df.sparkSession.sparkContext
@@ -2275,44 +1973,35 @@ def _custom_chunks(work, meas, gb_dict, src_spec, tile_size, zoom, fill,
 # interpolate_na post-pass (reference vector_to_cube.py:291-292)
 # ---------------------------------------------------------------------------
 
-def _interpolate_na_tiled(cube: GeoCube, method: str) -> GeoCube:
+def _interpolate_na_tiled(cube: GeoCube) -> GeoCube:
     """Distributed ``interpolate_na`` for ``method='nearest'`` — no
     full-band assembly: every tile fills its nodata cells from the
-    DATA cells of a halo ring of neighbor chunks, certified by the
-    same strict-margin rule as the tiled nearest interpolator (a
-    filled cell whose donor is strictly closer than the gathered
-    region's boundary cannot be beaten or tied by any ungathered data
-    cell — donors sort row-major, the global tie order). Uncertified
-    tiles double the halo; the final round gathers the whole band.
-    Tiles absent from the burn (no covering geometry) are emitted
-    filled, exactly like the single-task path; a band with no data
-    cells at all passes through unchanged (global parity).
-
-    Per-round plan: tile-to-halo-tile explode -> ONE left equi-join
-    carrying whole chunk rows (a (2r+1)^2 ring of <= tile^2-cell
-    arrays per tile, never the full band) -> one grouped map."""
+    DATA cells of a halo ring of neighbor chunks (the tiles are the
+    bucket grid), certified by the same strict-margin rule as the
+    tiled nearest interpolator (a filled cell whose donor is strictly
+    closer than the gathered region's boundary cannot be beaten or
+    tied by any ungathered data cell — donors sort row-major, the
+    global tie order). Tiles absent from the burn (no covering
+    geometry) are emitted filled, exactly like the single-task path; a
+    band with no data cells at all passes through unchanged (global
+    parity). A round joins whole chunk rows (a (2r+1)^2 ring of <=
+    tile^2-cell arrays per tile), never the full band."""
     from .plans.flatten import _flat
 
-    if method != "nearest":
-        raise ValueError(
-            "tiled interpolate_na supports method='nearest' only "
-            "(linear/cubic are globally coupled)"
-        )
     gb_dict = cube.geobox.to_dict()
     gb0 = cube.geobox
     ts = cube.tile_size
-    A = gb0.affine
-    n_tiles, ntx, nty = gb0.n_tiles(ts)
-    H, Wd = gb0.height, gb0.width
+    ntx = gb0.n_tiles(ts)[1]
+    Wd = gb0.width
+    coords = gb0.coords()
+    pad = _margin_pad(gb0)
     fills = {m: b.fill for m, b in cube.bands.items()}
     spark = cube.chunks.sparkSession
 
     src = cube.chunks.select(
         "*",
-        F.coalesce(F.col("group_key").cast("string"), F.lit("\x00"))
+        F.coalesce(F.col("group_key").cast("string"), F.lit(NO_GROUP))
         .alias("__g"),
-        (F.col("tile_id") / ntx).cast("int").alias("dti"),
-        F.pmod(F.col("tile_id"), F.lit(ntx)).cast("int").alias("dtj"),
     ).transform(_flat)
 
     # band-level meta + total data-cell count (for the full-gather /
@@ -2330,7 +2019,6 @@ def _interpolate_na_tiled(cube: GeoCube, method: str) -> GeoCube:
         F.sum("n_geoms").alias("ng"),
         F.min("min_seq").alias("mn"),
         F.max("max_seq").alias("mx"),
-        F.count(F.lit(1)).alias("rows"),
     ).collect():
         meta[(r_["measurement"], r_["__g"])] = (
             int(r_["zoom"]), int(r_["ng"]), int(r_["mn"]),
@@ -2344,185 +2032,69 @@ def _interpolate_na_tiled(cube: GeoCube, method: str) -> GeoCube:
                    .agg(F.sum(_is_data(m)).alias("nd")).collect()):
             counts[(m, r_["__g"])] = int(r_["nd"] or 0)
 
-    bands_df = spark.createDataFrame(
-        [(m, g) for (m, g) in sorted(meta)],
-        "measurement string, __g string",
-    )
-    tiles = (
-        spark.range(n_tiles).select(F.col("id").alias("tile_id"))
-        .withColumn("ti", (F.col("tile_id") / ntx).cast("int"))
-        .withColumn("tj", F.pmod(F.col("tile_id"), F.lit(ntx)).cast("int"))
-        .withColumn("row0", F.col("ti") * ts)
-        .withColumn("col0", F.col("tj") * ts)
-        .withColumn("h", F.least(F.lit(ts), F.lit(H) - F.col("row0")))
-        .withColumn("w", F.least(F.lit(ts), F.lit(Wd) - F.col("col0")))
-        .crossJoin(F.broadcast(bands_df))
+    bands_df = spark.createDataFrame(sorted(meta),
+                                     "measurement string, __g string")
+    tiles = _tiles_frame(spark, gb_dict, ts, ts, bands_df)
+    donors = src.select(
+        "measurement", "__g",
+        (F.col("tile_id") / ntx).cast("int").alias("bi"),
+        F.pmod(F.col("tile_id"), F.lit(ntx)).cast("int").alias("bj"),
+        F.col("row0").alias("c_row0"), F.col("col0").alias("c_col0"),
+        F.col("h").alias("c_h"), F.col("w").alias("c_w"), "values",
     )
 
-    out_cols = [f.name for f in _CHUNK_FIELDS]
-    eval_schema = T.StructType(
-        list(CHUNK_SCHEMA.fields)
-        + [T.StructField("__g", T.StringType()),
-           T.StructField("ti", T.IntegerType()),
-           T.StructField("tj", T.IntegerType()),
-           T.StructField("ok", T.BooleanType())]
-    )
-    tkeys = ["measurement", "__g", "tile_id", "row0", "col0", "h", "w",
-             "ti", "tj"]
-    span = max(abs(A.a) * Wd, abs(A.e) * H, 1e-300)
-    pad = 1e-9 * span
+    def _fill(t, rows, gx, gy, rect):
+        nod = float(fills[t.m])
+        # the tile's own values (absent chunk row = all nodata)
+        own = rows[(rows["c_row0"] == t.row0) & (rows["c_col0"] == t.col0)]
+        if len(own):
+            band = np.asarray(own.iloc[0]["values"],
+                              dtype=np.float64).reshape(t.h, t.w)
+        else:
+            band = np.full((t.h, t.w), nod, dtype=np.float64)
+        nmask = np.isnan(band) if np.isnan(nod) else band == nod
+        if not nmask.any():
+            return band, True  # nothing to fill
 
-    def _mk_eval(r):
-        from .kernels.interpolate import nearest_interp
+        # gather donors (data cells of the halo chunks), sorted
+        # row-major — the global tie order
+        dx, dy, dv, dkey = [], [], [], []
+        for _, cr in rows.iterrows():
+            cv = np.asarray(cr["values"], dtype=np.float64) \
+                .reshape(int(cr["c_h"]), int(cr["c_w"]))
+            dm = ~np.isnan(cv) if np.isnan(nod) else cv != nod
+            if not dm.any():
+                continue
+            rr, cc = np.nonzero(dm)
+            rr = rr + int(cr["c_row0"])
+            cc = cc + int(cr["c_col0"])
+            dx.append(coords["x"][cc])
+            dy.append(coords["y"][rr])
+            dv.append(cv[dm])
+            dkey.append(rr.astype(np.int64) * Wd + cc)
+        n_local = sum(len(a) for a in dv)
+        full = n_local == counts.get((t.m, t.g), 0)
+        if n_local == 0:
+            # no data cells gathered: certified only when the band
+            # truly has none (global: all-nodata passes through)
+            return band, full
+        order = np.argsort(np.concatenate(dkey), kind="stable")
+        px = np.concatenate(dx)[order]
+        py = np.concatenate(dy)[order]
+        pv = np.concatenate(dv)[order]
 
-        def _eval(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            m, g, tile_id, row0, col0, h, w, ti, tj = key
-            zoom, ng, mn, mx = meta[(m, g)]
-            n_data = counts.get((m, g), 0)
-            nod = float(fills[m])
-            gb = GeoBox.from_dict(gb_dict)
-            coords = gb.coords()
-            rows = pdf[pdf["values"].notna()]
+        gxm, gym = np.meshgrid(gx, gy)
+        qx, qy = gxm[nmask], gym[nmask]
+        idx = nearest_interp(
+            px, py, np.arange(len(px), dtype=np.float64), qx, qy
+        ).astype(np.int64)
+        d = np.hypot(qx - px[idx], qy - py[idx])
+        fixed = band.copy()
+        fixed[nmask] = pv[idx]
+        return fixed, full or margin_certified(qx, qy, d, rect, pad)
 
-            # the tile's own values (absent chunk row = all nodata)
-            own = rows[(rows["c_row0"] == row0)
-                       & (rows["c_col0"] == col0)]
-            if len(own):
-                band = np.asarray(own.iloc[0]["values"],
-                                  dtype=np.float64).reshape(h, w)
-            else:
-                band = np.full((h, w), nod, dtype=np.float64)
-            nmask = np.isnan(band) if np.isnan(nod) else band == nod
-            gkey = None if g == "\x00" else g
-
-            def _row(vals, ok):
-                return pd.DataFrame([{
-                    "measurement": m, "group_key": gkey, "zoom": zoom,
-                    "tile_id": tile_id, "row0": row0, "col0": col0,
-                    "h": h, "w": w, "values": vals.ravel(),
-                    "n_geoms": ng, "n_cells_burned": int(h * w),
-                    "min_seq": mn, "max_seq": mx,
-                    "__g": g, "ti": ti, "tj": tj, "ok": bool(ok),
-                }], columns=out_cols + ["__g", "ti", "tj", "ok"])
-
-            if not nmask.any():
-                return _row(band, True)  # nothing to fill
-
-            # gather donors (data cells of the halo chunks), sorted
-            # row-major — the global tie order
-            dx, dy, dv, dkey = [], [], [], []
-            for _, cr in rows.iterrows():
-                cv = np.asarray(cr["values"], dtype=np.float64) \
-                    .reshape(int(cr["c_h"]), int(cr["c_w"]))
-                dm = ~np.isnan(cv) if np.isnan(nod) else cv != nod
-                if not dm.any():
-                    continue
-                rr, cc = np.nonzero(dm)
-                rr = rr + int(cr["c_row0"])
-                cc = cc + int(cr["c_col0"])
-                dx.append(coords["x"][cc])
-                dy.append(coords["y"][rr])
-                dv.append(cv[dm])
-                dkey.append(rr.astype(np.int64) * Wd + cc)
-            n_local = sum(len(a) for a in dv)
-            full = n_local == n_data
-            if n_local == 0:
-                # no data cells gathered: certified only when the band
-                # truly has none (global: all-nodata passes through)
-                return _row(band, full)
-            order = np.argsort(np.concatenate(dkey), kind="stable")
-            px = np.concatenate(dx)[order]
-            py = np.concatenate(dy)[order]
-            pv = np.concatenate(dv)[order]
-
-            gx = coords["x"][col0: col0 + w]
-            gy = coords["y"][row0: row0 + h]
-            gxm, gym = np.meshgrid(gx, gy)
-            qx, qy = gxm[nmask], gym[nmask]
-            idx = nearest_interp(
-                px, py, np.arange(len(px), dtype=np.float64), qx, qy
-            ).astype(np.int64)
-            d = np.hypot(qx - px[idx], qy - py[idx])
-            if full:
-                ok = True
-            else:
-                lo_i, hi_i = ti - r, ti + r
-                lo_j, hi_j = tj - r, tj + r
-                xe = (A.c + A.a * lo_j * ts, A.c + A.a * (hi_j + 1) * ts)
-                ye = (A.f + A.e * lo_i * ts, A.f + A.e * (hi_i + 1) * ts)
-                x0, x1 = min(xe), max(xe)
-                y0, y1 = min(ye), max(ye)
-                if lo_j <= 0:
-                    x0 = -np.inf if A.a > 0 else x0
-                    x1 = np.inf if A.a < 0 else x1
-                if hi_j >= ntx - 1:
-                    x1 = np.inf if A.a > 0 else x1
-                    x0 = -np.inf if A.a < 0 else x0
-                if lo_i <= 0:
-                    y1 = np.inf if A.e < 0 else y1
-                    y0 = -np.inf if A.e > 0 else y0
-                if hi_i >= nty - 1:
-                    y0 = -np.inf if A.e < 0 else y0
-                    y1 = np.inf if A.e > 0 else y1
-                margin = np.minimum.reduce([
-                    qx - x0, x1 - qx, qy - y0, y1 - qy
-                ])
-                ok = bool((d < margin - pad).all())
-            fixed = band.copy()
-            fixed[nmask] = pv[idx]
-            return _row(fixed, ok)
-
-        return _eval
-
-    unresolved = tiles.transform(_flat)
-    resolved = []
-    r = 1
-    r_cover = max(ntx, nty)
-    for round_i in range(6):
-        if round_i == 5:
-            r = r_cover
-        cand = (
-            unresolved
-            .withColumn("bi", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("ti") - F.lit(r)),
-                F.least(F.lit(nty - 1), F.col("ti") + F.lit(r)))))
-            .withColumn("bj", F.explode(F.sequence(
-                F.greatest(F.lit(0), F.col("tj") - F.lit(r)),
-                F.least(F.lit(ntx - 1), F.col("tj") + F.lit(r)))))
-            .withColumn("bi", F.col("bi").cast("int"))
-            .withColumn("bj", F.col("bj").cast("int"))
-        )
-        joined = cand.join(
-            src.select(
-                "measurement", "__g",
-                F.col("dti").alias("bi"), F.col("dtj").alias("bj"),
-                F.col("row0").alias("c_row0"),
-                F.col("col0").alias("c_col0"),
-                F.col("h").alias("c_h"), F.col("w").alias("c_w"),
-                "values",
-            ),
-            ["measurement", "__g", "bi", "bj"], "left",
-        )
-        out = joined.groupBy(*tkeys).applyInPandas(
-            _mk_eval(r), schema=eval_schema
-        ).transform(_flat)
-        resolved.append(out.filter(F.col("ok")).select(*out_cols))
-        solved = out.filter(F.col("ok")).select(*tkeys)
-        unresolved = unresolved.join(
-            solved, tkeys, "left_anti"
-        ).transform(_flat)
-        n_left = unresolved.count()
-        logger.debug(
-            "tiled-interpolate_na round %d (halo r=%d tiles): %d "
-            "tiles unresolved", round_i + 1, r, n_left,
-        )
-        if n_left == 0:
-            break
-        r *= 2
-
-    final = resolved[0]
-    for df in resolved[1:]:
-        final = final.unionByName(df)
+    final = halo_resolve(tiles, donors, gb_dict, ts, meta, _fill,
+                         label="tiled-interpolate_na")
     return GeoCube(
         chunks=final, geobox=cube.geobox, bands=cube.bands,
         group_by=cube.group_by, group_keys=cube.group_keys,
@@ -2552,29 +2124,18 @@ def _interpolate_na_cube(cube: GeoCube, method: str) -> GeoCube:
         fixed = interpolate_na(band, coords["x"], coords["y"], nodata, method)
         gkey = pdf["group_key"].iloc[0] if len(pdf) else None
         zoom = int(pdf["zoom"].iloc[0]) if len(pdf) else 0
+        n_geoms = int(pdf["n_geoms"].sum()) if len(pdf) else 0
+        mn = int(pdf["min_seq"].min()) if len(pdf) else -1
+        mx = int(pdf["max_seq"].max()) if len(pdf) else -1
         # emit the FULL tile grid: interpolation fills tiles that had no
         # chunk row at burn time (no covering geometry)
         out = []
-        for tile_id, row0, col0, th, tw in gb.tile_grid(tile_size):
-            sub = fixed[row0 : row0 + th, col0 : col0 + tw]
-            out.append(
-                {
-                    "measurement": m,
-                    "group_key": gkey,
-                    "zoom": zoom,
-                    "tile_id": tile_id,
-                    "row0": row0,
-                    "col0": col0,
-                    "h": th,
-                    "w": tw,
-                    "values": sub.ravel(),
-                    "n_geoms": int(pdf["n_geoms"].sum()) if len(pdf) else 0,
-                    "n_cells_burned": int(th * tw),
-                    "min_seq": int(pdf["min_seq"].min()) if len(pdf) else -1,
-                    "max_seq": int(pdf["max_seq"].max()) if len(pdf) else -1,
-                }
-            )
-        return pd.DataFrame(out, columns=[f.name for f in _CHUNK_FIELDS])
+        for tile in gb.tile_grid(tile_size):
+            _, row0, col0, th, tw = tile
+            out.append(_chunk_row(m, gkey, zoom, tile,
+                                  fixed[row0:row0 + th, col0:col0 + tw],
+                                  n_geoms, mn, mx))
+        return pd.DataFrame(out, columns=CHUNK_SCHEMA.names)
 
     keys = ["measurement", "group_key"]
     sc = cube.chunks.sparkSession.sparkContext

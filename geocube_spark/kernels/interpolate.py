@@ -265,7 +265,8 @@ def idw_interp(px, py, values, qx, qy, *, power=2.0, smoothing=0.0,
         den = w.sum(axis=1)
         ok = (n_in >= need) & (den > 0) & np.isfinite(den)
         num = w @ values
-        blk = np.where(ok, num / np.where(den == 0, 1.0, den), fill)
+        blk = np.full(len(den), fill, dtype=np.float64)
+        np.divide(num, den, out=blk, where=ok)
         if s2 == 0.0:
             # exact hits: first (lowest-index) coincident point wins
             hit = d2 == 0.0

@@ -1457,7 +1457,7 @@ FROM r WHERE rn = 1 ORDER BY row, col
 """
 
 
-def q_interp_proximity(spark, sf_dir, interp_engine="auto"):
+def q_interp_proximity(spark, sf_dir):
     """Proximity raster (GDAL gdal_proximity / xarray-spatial
     proximity): every grid cell's distance in CRS units to the nearest
     input point — the nearest-interp plan with the distance, not the
@@ -1477,7 +1477,6 @@ def q_interp_proximity(spark, sf_dir, interp_engine="auto"):
         rasterize_function="points_griddata",
         interp_method="proximity",
         tile_size=64,
-        interp_engine=interp_engine,
     )
     cell = cube.chunks.select(
         "row0", "col0", "w", F.posexplode("values").alias("pos", "val")
@@ -1509,7 +1508,7 @@ ORDER BY row, col
 """
 
 
-def q_interp_idw(spark, sf_dir, interp_engine="auto"):
+def q_interp_idw(spark, sf_dir):
     """Inverse-distance-weighted surface (gdal_grid 'invdist',
     kernels/interpolate.idw_interp) with the parameters in gdal_grid's
     own algorithm syntax: power=2, smoothing=1 (weights stay finite),
@@ -1530,7 +1529,6 @@ def q_interp_idw(spark, sf_dir, interp_engine="auto"):
         rasterize_function="points_griddata",
         interp_method="invdist:power=2:smoothing=1:radius=40:min_points=1",
         tile_size=64,
-        interp_engine=interp_engine,
     )
     cell = cube.chunks.select(
         "row0", "col0", "w", F.posexplode("values").alias("pos", "val")
@@ -1686,8 +1684,7 @@ FROM r WHERE rn = 1 ORDER BY row, col
 """
 
 
-def _interp_query(spark, sf_dir, function, method, nudge=0.0,
-                  interp_engine="auto"):
+def _interp_query(spark, sf_dir, function, method, nudge=0.0):
     from ..cube import make_geocube
 
     vec = _event_vector_df(spark, sf_dir).filter(F.col("seq") % 97 == 0)
@@ -1700,7 +1697,6 @@ def _interp_query(spark, sf_dir, function, method, nudge=0.0,
         rasterize_function=function,
         interp_method=method,
         tile_size=64,
-        interp_engine=interp_engine,
     )
     cell = cube.chunks.select(
         "row0", "col0", "w", F.posexplode("values").alias("pos", "val")
@@ -1716,7 +1712,7 @@ def _interp_query(spark, sf_dir, function, method, nudge=0.0,
     ).orderBy("row", "col")
 
 
-def q_interpolate_na(spark, sf_dir, interp_engine="auto"):
+def q_interpolate_na(spark, sf_dir):
     """interpolate_na post-pass (vector_to_cube.py:291-292 via
     rioxarray): burn points with replace, then fill every nodata cell
     from its nearest valid cell. Oracle replays the exact two-level
@@ -1733,7 +1729,6 @@ def q_interpolate_na(spark, sf_dir, interp_engine="auto"):
         merge_alg="replace",
         interpolate_na_method="nearest",
         tile_size=64,
-        interp_engine=interp_engine,
     )
     cell = cube.chunks.select(
         "row0", "col0", "w", F.posexplode("values").alias("pos", "val")
@@ -5059,6 +5054,20 @@ ORDER BY f.row, f.col
 """
 
 
+def _tiled(query):
+    """``query`` run with every size-routed interpolator pinned to its
+    halo-tiled engine. The registry's inputs sit below the size
+    thresholds, so the ``*_tiled`` extras need this to check the tiled
+    engine against the same oracle."""
+    from ..cube import _forced_engine
+
+    def run(spark, sf_dir):
+        with _forced_engine("tiled"):
+            return query(spark, sf_dir)
+
+    return run
+
+
 EXTRA_QUERIES = {
     # downstream flow length (round 4 cont., bandops.flow_length):
     # pointer jumping with additive distance rider
@@ -5110,9 +5119,8 @@ EXTRA_QUERIES = {
     # closed-form Delaunay SQL oracle — driver-grade evidence that
     # the no-single-task path is value-identical to the global fit
     "interp_linear_tiled": (
-        lambda spark, sf_dir: _interp_query(
-            spark, sf_dir, "points_griddata", "linear", nudge=1e-9,
-            interp_engine="tiled"),
+        _tiled(lambda spark, sf_dir: _interp_query(
+            spark, sf_dir, "points_griddata", "linear", nudge=1e-9)),
         SQL_INTERP_LINEAR,
     ),
     "burn_points_replace": (q_burn_points_replace, SQL_BURN_REPLACE),
@@ -5191,21 +5199,14 @@ EXTRA_QUERIES = {
     # round 5: the SAME queries forced through the halo-grown tiled
     # nearest engine (no point-set broadcast) against the SAME oracles
     "interp_nearest_tiled": (
-        lambda spark, sf_dir: _interp_query(
-            spark, sf_dir, "points_griddata", "nearest",
-            interp_engine="tiled"),
+        _tiled(lambda spark, sf_dir: _interp_query(
+            spark, sf_dir, "points_griddata", "nearest")),
         SQL_INTERP_NEAREST,
     ),
-    "interp_proximity_tiled": (
-        lambda spark, sf_dir: q_interp_proximity(
-            spark, sf_dir, interp_engine="tiled"),
-        SQL_INTERP_PROXIMITY,
-    ),
-    "interpolate_na_tiled": (
-        lambda spark, sf_dir: q_interpolate_na(
-            spark, sf_dir, interp_engine="tiled"),
-        SQL_INTERPOLATE_NA,
-    ),
+    "interp_proximity_tiled": (_tiled(q_interp_proximity),
+                               SQL_INTERP_PROXIMITY),
+    "interpolate_na_tiled": (_tiled(q_interpolate_na),
+                             SQL_INTERPOLATE_NA),
     # inverse-distance-weighted surface (gdal_grid 'invdist' with its
     # own algorithm-string syntax; kernels/interpolate.idw_interp):
     # power/smoothing/radius/min_points; scalar referee in
@@ -5214,11 +5215,7 @@ EXTRA_QUERIES = {
     # round 5: the SAME radius-bounded IDW forced through the
     # fixed-halo tiled engine (cube._interp_idw_tiled) against the
     # SAME closed-form oracle — one round, exact by construction
-    "interp_idw_tiled": (
-        lambda spark, sf_dir: q_interp_idw(spark, sf_dir,
-                                           interp_engine="tiled"),
-        SQL_INTERP_IDW,
-    ),
+    "interp_idw_tiled": (_tiled(q_interp_idw), SQL_INTERP_IDW),
     # raster sampling at points (bandops.point_query): nearest =
     # rasterio sample / xarray .sel parity, bilinear = GDAL
     # GRIORA_Bilinear cell-center convention; both pure Catalyst

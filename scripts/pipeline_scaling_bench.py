@@ -293,16 +293,18 @@ def _headliners(spark, scale):
         # points AND grid both scale 4x (resolution halves per side),
         # so wall/scale is a clean per-unit-work metric for the
         # round-5 halo-tiled certified fit — the work per tile stays
-        # ~points-in-tile + O(ring) by design
-        from geocube_spark.cube import make_geocube
+        # ~points-in-tile + O(ring) by design. Scale 1 is exactly the
+        # 150k routing threshold (not above it), so pin the engine.
+        from geocube_spark.cube import _forced_engine, make_geocube
 
         res = 0.01 / (scale ** 0.5)
-        cube = make_geocube(
-            pts, measurements=["value"], fill=float("nan"),
-            rasterize_function="points_griddata",
-            interp_method="linear", interp_engine="tiled",
-            resolution=(-res, res), tile_size=256,
-        )
+        with _forced_engine("tiled"):
+            cube = make_geocube(
+                pts, measurements=["value"], fill=float("nan"),
+                rasterize_function="points_griddata",
+                interp_method="linear",
+                resolution=(-res, res), tile_size=256,
+            )
         return cube.chunks.count()
 
     return {

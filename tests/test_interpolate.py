@@ -31,6 +31,7 @@ def test_proximity_matches_brute_force():
                          px, py, np.zeros(n), rescale=True)(gx, gy)
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_idw_matches_scalar_reference():
     """gdal_grid 'invdist' parity: a scalar python replay of the
     closed form (weight = (d^2+s^2)^(-p/2), radius cut on raw

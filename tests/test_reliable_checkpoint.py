@@ -105,7 +105,7 @@ def test_tiled_linear_reliable_equals_local(spark, tmp_path):
     reliable path must reach the identical cube."""
     import pandas as pd
 
-    from geocube_spark.cube import make_geocube
+    from geocube_spark.cube import _forced_engine, make_geocube
     from geocube_spark.geometry import wkb as W
 
     rng = np.random.default_rng(13)
@@ -119,12 +119,14 @@ def test_tiled_linear_reliable_equals_local(spark, tmp_path):
     docs = spark.createDataFrame(pdf)
 
     def build():
-        cube = make_geocube(
-            docs, measurements=["value"], fill=float("nan"),
-            rasterize_function="points_griddata",
-            interp_method="linear", interp_engine="tiled",
-            resolution=(-0.02, 0.02), tile_size=16,
-        )
+        # 400 points: below the routing threshold, so pin the engine
+        with _forced_engine("tiled"):
+            cube = make_geocube(
+                docs, measurements=["value"], fill=float("nan"),
+                rasterize_function="points_griddata",
+                interp_method="linear",
+                resolution=(-0.02, 0.02), tile_size=16,
+            )
         return {r["tile_id"]: list(r["values"])
                 for r in cube.chunks.collect()}
 

@@ -10,11 +10,13 @@ grouped and ungrouped), kernel-level certificate behavior, and
 guaranteed termination via the full-gather final round.
 """
 
+from contextlib import nullcontext
+
 import numpy as np
 import pandas as pd
 import pytest
 
-from geocube_spark.cube import make_geocube
+from geocube_spark.cube import _forced_engine, make_geocube
 from geocube_spark.geometry import wkb as W
 from geocube_spark.kernels.delaunay import Triangulation
 from geocube_spark.kernels.tiled_linear import (convex_hull,
@@ -58,12 +60,18 @@ def _assert_parity(g, t):
         assert g[k][5:] == t[k][5:], k
 
 
+def _geocube(engine, docs, **kw):
+    """make_geocube with the engine pinned ('tiled' or 'global'), or
+    with the size-based routing ('auto')."""
+    with nullcontext() if engine == "auto" else _forced_engine(engine):
+        return make_geocube(docs, **kw)
+
+
 def _build(docs, engine, **kw):
-    return _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    return _chunks(_geocube(
+        engine, docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="linear",
-        interp_engine=engine, **kw,
-    ))
+        **kw))
 
 
 def test_tiled_matches_global_random(spark):
@@ -116,17 +124,15 @@ def test_tiled_matches_global_grouped(spark):
     docs = _vec(spark, rng.uniform(-93.8, -92.2, n),
                 rng.uniform(41.2, 42.6, n), rng.uniform(0, 9, n),
                 group=[("a" if i % 2 else "b") for i in range(n)])
-    g = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    g = _chunks(_geocube(
+        "global", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="linear",
-        interp_engine="global", group_by="grp",
-        resolution=(-0.02, 0.02), tile_size=32,
+        group_by="grp", resolution=(-0.02, 0.02), tile_size=32,
     ))
-    t = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    t = _chunks(_geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="linear",
-        interp_engine="tiled", group_by="grp",
-        resolution=(-0.02, 0.02), tile_size=32,
+        group_by="grp", resolution=(-0.02, 0.02), tile_size=32,
     ))
     _assert_parity(g, t)
 
@@ -223,10 +229,10 @@ def test_tiled_plan_has_no_cartesian(spark):
     n = 200
     docs = _vec(spark, rng.uniform(-93.8, -92.2, n),
                 rng.uniform(41.2, 42.6, n), rng.uniform(0, 5, n))
-    cube = make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    cube = _geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="linear",
-        interp_engine="tiled", resolution=(-0.02, 0.02), tile_size=32,
+        resolution=(-0.02, 0.02), tile_size=32,
     )
     plan = cube.chunks._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -264,11 +270,10 @@ def test_delaunay_degenerate_lattice_guard():
 
 
 def _build_idw(docs, engine, method, **kw):
-    return _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    return _chunks(_geocube(
+        engine, docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method=method,
-        interp_engine=engine, **kw,
-    ))
+        **kw))
 
 
 def test_tiled_idw_matches_global(spark):
@@ -307,17 +312,15 @@ def test_tiled_idw_grouped_and_min_points(spark):
                 rng.uniform(41.2, 42.6, n), rng.uniform(0, 9, n),
                 group=[("a" if i % 2 else "b") for i in range(n)])
     m = "invdist:power=2:radius=0.1:min_points=3"
-    g = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    g = _chunks(_geocube(
+        "global", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method=m,
-        interp_engine="global", group_by="grp",
-        resolution=(-0.02, 0.02), tile_size=16,
+        group_by="grp", resolution=(-0.02, 0.02), tile_size=16,
     ))
-    t = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    t = _chunks(_geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method=m,
-        interp_engine="tiled", group_by="grp",
-        resolution=(-0.02, 0.02), tile_size=16,
+        group_by="grp", resolution=(-0.02, 0.02), tile_size=16,
     ))
     assert set(g) == set(t)
     for k in g:
@@ -338,15 +341,15 @@ def test_tiled_nearest_matches_global(spark):
     n = 600
     docs = _vec(spark, rng.uniform(-93.8, -92.2, n),
                 rng.uniform(41.2, 42.6, n), rng.uniform(0, 100, n))
-    g = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    g = _chunks(_geocube(
+        "global", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="nearest",
-        interp_engine="global", resolution=(-0.01, 0.01), tile_size=32,
+        resolution=(-0.01, 0.01), tile_size=32,
     ))
-    t = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    t = _chunks(_geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="nearest",
-        interp_engine="tiled", resolution=(-0.01, 0.01), tile_size=32,
+        resolution=(-0.01, 0.01), tile_size=32,
     ))
     assert set(g) == set(t)
     for k in g:
@@ -359,16 +362,16 @@ def test_tiled_proximity_matches_global(spark):
     n = 300
     docs = _vec(spark, rng.uniform(-93.8, -92.2, n),
                 rng.uniform(41.2, 42.6, n), np.arange(n, dtype=float))
-    g = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    g = _chunks(_geocube(
+        "global", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata",
-        interp_method="proximity", interp_engine="global",
+        interp_method="proximity",
         resolution=(-0.02, 0.02), tile_size=16,
     ))
-    t = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    t = _chunks(_geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata",
-        interp_method="proximity", interp_engine="tiled",
+        interp_method="proximity",
         resolution=(-0.02, 0.02), tile_size=16,
     ))
     assert set(g) == set(t)
@@ -387,15 +390,15 @@ def test_tiled_nearest_clustered_growth(spark):
     lat = np.concatenate([
         41.5 + rng.normal(0, 0.02, 50), 42.4 + rng.normal(0, 0.02, 50)])
     docs = _vec(spark, lon, lat, np.arange(len(lon), dtype=float))
-    g = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    g = _chunks(_geocube(
+        "global", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="nearest",
-        interp_engine="global", resolution=(-0.02, 0.02), tile_size=8,
+        resolution=(-0.02, 0.02), tile_size=8,
     ))
-    t = _chunks(make_geocube(
-        docs, measurements=["value"], fill=float("nan"),
+    t = _chunks(_geocube(
+        "tiled", docs, measurements=["value"], fill=float("nan"),
         rasterize_function="points_griddata", interp_method="nearest",
-        interp_engine="tiled", resolution=(-0.02, 0.02), tile_size=8,
+        resolution=(-0.02, 0.02), tile_size=8,
     ))
     assert set(g) == set(t)
     for k in g:
@@ -414,11 +417,10 @@ def test_tiled_interpolate_na_matches_global(spark):
                 np.arange(1, n + 1, dtype=float))
 
     def build(engine):
-        cube = make_geocube(
-            docs, measurements=["value"], fill=-9999.0,
+        cube = _geocube(
+            engine, docs, measurements=["value"], fill=-9999.0,
             resolution=(-0.02, 0.02), tile_size=16,
             merge_alg="add", interpolate_na_method="nearest",
-            interp_engine=engine,
         )
         return {r["tile_id"]: (r["row0"], r["col0"], r["h"], r["w"],
                                np.asarray(r["values"], dtype=np.float64),
@@ -445,11 +447,10 @@ def test_tiled_interpolate_na_grouped(spark):
                 group=[("a" if i % 2 else "b") for i in range(n)])
 
     def build(engine):
-        cube = make_geocube(
-            docs, measurements=["value"], fill=-9999.0,
+        cube = _geocube(
+            engine, docs, measurements=["value"], fill=-9999.0,
             resolution=(-0.04, 0.04), tile_size=8, group_by="grp",
             merge_alg="add", interpolate_na_method="nearest",
-            interp_engine=engine,
         )
         return {(r["group_key"], r["tile_id"]):
                 np.asarray(r["values"], dtype=np.float64)
