@@ -54,6 +54,7 @@ from .kernels.rasterize import (
     edges_from_varying_rings,
     geometry_cells,
 )
+from .plans.checkpoint import DEFAULT_N_BUCKETS, write_cube
 from .plans.halo import NO_GROUP, halo_resolve, margin_certified
 
 logger = logging.getLogger("geocube_spark")
@@ -338,30 +339,11 @@ class GeoCube:
 
         return warp(self, like, method=method, tile_size=tile_size)
 
-    def write(self, path: str, *, n_buckets: int = 64,
-              commit_batches: int = 4, fail_after: Optional[int] = None,
-              mode: Optional[str] = None):
+    def write(self, path: str, *, n_buckets: int = DEFAULT_N_BUCKETS,
+              commit_batches: int = 4, fail_after: Optional[int] = None):
         """Persist the cube as committed snapshots partitioned by
         (zoom, cell bucket) — the Iceberg layout of the north rule —
-        with per-tile lineage and kill-resume (plans.checkpoint).
-
-        ``mode`` is the legacy plain-parquet-writer kwarg: accepted
-        for source compatibility but ignored with a warning — the
-        layout is manifest-gated now and must be read back with
-        ``plans.checkpoint.read_cube``, not ``spark.read.parquet``."""
-        if mode is not None:
-            import warnings
-
-            warnings.warn(
-                "GeoCube.write(mode=...) is ignored: the sink writes a "
-                "manifest-gated snapshot layout (every call is its own "
-                "committed snapshot); read it back with "
-                "plans.checkpoint.read_cube",
-                FutureWarning,
-                stacklevel=2,
-            )
-        from .plans.checkpoint import write_cube
-
+        with per-tile lineage and kill-resume (plans.checkpoint)."""
         _, ntx, nty = self.geobox.n_tiles(self.tile_size)
         return write_cube(
             self.chunks, path, n_buckets=n_buckets,
@@ -556,7 +538,7 @@ def make_geocube(
     for m, mapping in enum_maps.items():
         mexpr = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
         work = work.withColumn(
-            m, F.coalesce(mexpr.getItem(F.col(m)), F.lit(-1)).cast("double")
+            m, F.coalesce(mexpr[F.col(m)], F.lit(-1)).cast("double")
         )
     for m in datetime_measurements:
         # the group_by column converts too: group keys must sort

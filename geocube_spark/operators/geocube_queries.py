@@ -1060,7 +1060,7 @@ def q_categorical_encode(spark, sf_dir):
     return (
         li.select(
             F.col("l_returnflag").alias("label"),
-            F.coalesce(mexpr.getItem(F.col("l_returnflag")), F.lit(-1))
+            F.coalesce(mexpr[F.col("l_returnflag")], F.lit(-1))
             .cast("int")
             .alias("code"),
         )

@@ -10,7 +10,6 @@ so this module reproduces the *transactional layout* on plain parquet:
     <table>/
       data/snap=<id>/zoom=<z>/cell_bucket=<b>/*.parquet   (invisible
                                        until the snapshot is committed)
-      lineage/snap=<id>/*.parquet     per-tile lineage of the snapshot
       _manifests/snapshot-<id>.json   commit record (atomic rename)
       _manifests/CURRENT              pointer to the latest snapshot
 
@@ -21,9 +20,10 @@ Commit protocol (exactly Iceberg's shape):
 2. each group is written by one fully-distributed Spark job into its
    own ``data/snap=<id>/`` directory, partitioned by
    ``(zoom, cell_bucket)`` for partition pruning;
-3. per-tile lineage (tile_id, min/max input ``seq`` — the span range —
-   row and cell counts) is aggregated in the same pass and written
-   next to it;
+3. lineage is a view over the committed data: every chunk row carries
+   its tile_id, group, shape and min/max input ``seq`` (the span
+   range), so ``read_lineage`` aggregates the per-tile row and cell
+   counts and span range from the data files themselves;
 4. the snapshot manifest is written to a temp file and ``os.rename``d
    into ``_manifests/`` — the atomic commit point.
 
@@ -119,23 +119,18 @@ def _commit_manifest(path: str, manifest: dict) -> None:
     os.rename(tmp, cur)
 
 
-def _gc_uncommitted(path: str, committed_ids: set) -> list:
-    """Remove data/lineage dirs of snapshots that never committed
-    (leftovers of a killed job). Readers never see them anyway; this
-    reclaims space and keeps resume idempotent."""
-    removed = []
-    for sub in ("data", "lineage"):
-        base = os.path.join(path, sub)
-        if not os.path.isdir(base):
-            continue
-        for name in os.listdir(base):
-            if not name.startswith("snap="):
-                continue
-            sid = name.split("=", 1)[1]
-            if sid not in committed_ids:
-                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-                removed.append(f"{sub}/{name}")
-    return removed
+def _gc_uncommitted(path: str, committed_ids: set) -> None:
+    """Remove data dirs of snapshots that never committed (leftovers
+    of a killed job). Readers never see them anyway; this reclaims
+    space and keeps resume idempotent."""
+    base = os.path.join(path, "data")
+    if not os.path.isdir(base):
+        return
+    for name in os.listdir(base):
+        if name.startswith("snap=") and (
+            name.split("=", 1)[1] not in committed_ids
+        ):
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
 
 
 def cluster_order(ntx: int, nty: int) -> int:
@@ -191,6 +186,11 @@ def _collect_file_stats(data_dir: str, table_root: str) -> list[dict]:
     return entries
 
 
+def _sum_cells():
+    """Cells covered by the aggregated chunk rows."""
+    return F.sum(F.col("h").cast("long") * F.col("w"))
+
+
 def write_cube(
     chunks: DataFrame,
     path: str,
@@ -198,7 +198,6 @@ def write_cube(
     n_buckets: int = DEFAULT_N_BUCKETS,
     commit_batches: int = 4,
     fail_after: int | None = None,
-    verify_input: bool = False,
     cluster: dict | None = None,
     grid_spec: dict | None = None,
 ) -> WriteReport:
@@ -213,6 +212,14 @@ def write_cube(
     The batch key is ``pmod(tile_id, n_buckets) % commit_batches`` —
     deterministic from the data, so resume selects exactly the rows
     that were never committed, regardless of input order.
+
+    The input is persisted once, and ONE aggregate over it yields every
+    batch's (rows, cells); each uncommitted batch then costs one Spark
+    job, its data write, and takes its manifest metrics from that
+    aggregate. The same counts verify every resume: each committed
+    batch (compaction snapshots aside) must cover exactly the rows and
+    cells the current input yields for it, else the call raises
+    "resume input mismatch" instead of mixing two inputs in one table.
 
     ``cluster={"scheme": "hilbert", "ntx": int, "nty": int,
     "n_files": int}`` sorts every batch's rows by the Hilbert key of
@@ -260,7 +267,6 @@ def write_cube(
                     "original geobox/tile_size or a fresh path"
                 )
         else:
-            os.makedirs(path, exist_ok=True)
             tmp = gpath + ".tmp"
             with open(tmp, "w") as fh:
                 json.dump(grid_spec, fh)
@@ -309,29 +315,26 @@ def write_cube(
             ),
             "__ctx", "__cty", cluster["order"], "cluster_key",
         ).drop("__ctx", "__cty")
-    # one materialization of the (expensive) upstream pipeline; the
-    # per-batch filters below read the cache instead of re-burning
+    batch_of = F.pmod(F.col("cell_bucket"), F.lit(commit_batches))
+    # one materialization of the (expensive) upstream pipeline: the
+    # batch aggregate fills the cache, every batch write reads it
     withb = withb.persist()
-
-    if verify_input and prior:
-        # opt-in resume fingerprint: recompute each committed batch's
-        # (rows, cells) from the CURRENT input and compare with the
-        # manifest — catches resuming against changed upstream data at
-        # the cost of one filtered agg per committed batch
+    try:
+        stats = {
+            int(r["batch"]): (int(r["rows"]), int(r["cells"] or 0))
+            for r in withb.groupBy(batch_of.alias("batch")).agg(
+                F.count(F.lit(1)).alias("rows"), _sum_cells().alias("cells")
+            ).collect()
+        }
+        # resume fingerprint: a committed batch must cover exactly the
+        # rows/cells the current input yields for it, else the upstream
+        # data changed and skipping it would mix two inputs
         for m in prior:
-            part = withb.filter(
-                F.pmod(F.col("cell_bucket"), F.lit(commit_batches))
-                == m["batch"]
-            )
-            stats = part.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("h").cast("long") * F.col("w"))
-                .alias("cells"),
-            ).collect()[0]
+            if m.get("kind") == "compaction":
+                continue  # batch -1: its metrics span the folded batches
             want = m.get("metrics", {})
-            got = (int(stats["rows"] or 0), int(stats["cells"] or 0))
+            got = stats.get(m["batch"], (0, 0))
             if got != (want.get("rows"), want.get("cells")):
-                withb.unpersist()
                 raise ValueError(
                     f"resume input mismatch at {path}: committed batch "
                     f"{m['batch']} covered rows/cells {want.get('rows')}"
@@ -340,49 +343,37 @@ def write_cube(
                     "write to a fresh path"
                 )
 
-    report = WriteReport(path=path)
-    parent = prior[-1]["snapshot_id"] if prior else None
-    try:
-        return _write_batches(
-            withb, path, n_buckets, commit_batches, fail_after,
-            done_batches, parent, report, cluster,
-        )
+        report = WriteReport(path=path)
+        parent = prior[-1]["snapshot_id"] if prior else None
+        for batch in range(commit_batches):
+            if batch in done_batches:
+                report.skipped_snapshots.append(batch)
+                continue
+            new_commits = len(report.committed_snapshots)
+            if fail_after is not None and new_commits >= fail_after:
+                raise RuntimeError(
+                    f"injected failure after {new_commits} commits"
+                )
+            snapshot_id = f"{int(time.time() * 1000)}-{batch}"
+            _commit_one(
+                withb.filter(batch_of == batch), path, snapshot_id, parent,
+                batch, n_buckets, commit_batches, *stats.get(batch, (0, 0)),
+                report, cluster=cluster,
+            )
+            parent = snapshot_id
+        return report
     finally:
         withb.unpersist()
 
 
-def _write_batches(withb, path, n_buckets, commit_batches, fail_after,
-                   done_batches, parent, report, cluster=None):
-    new_commits = 0
-    for batch in range(commit_batches):
-        if batch in done_batches:
-            report.skipped_snapshots.append(batch)
-            continue
-        if fail_after is not None and new_commits >= fail_after:
-            raise RuntimeError(
-                f"injected failure after {new_commits} commits"
-            )
-        t0 = time.time()
-        snapshot_id = f"{int(time.time() * 1000)}-{batch}"
-        part = withb.filter(
-            F.pmod(F.col("cell_bucket"), F.lit(commit_batches)) == batch
-        )
-        data_dir = os.path.join(path, "data", f"snap={snapshot_id}")
-        part = part.persist()
-        try:
-            _commit_one(part, path, data_dir, snapshot_id, parent, batch,
-                        n_buckets, commit_batches, t0, report,
-                        cluster=cluster)
-        finally:
-            part.unpersist()
-        parent = snapshot_id
-        new_commits += 1
-    return report
-
-
-def _commit_one(part, path, data_dir, snapshot_id, parent, batch,
-            n_buckets, commit_batches, t0, report, kind=None,
-            cluster=None):
+def _commit_one(part, path, snapshot_id, parent, batch, n_buckets,
+                commit_batches, rows, cells, report, kind=None,
+                cluster=None):
+    """Write ``part`` as snapshot ``snapshot_id`` (one Spark job, or
+    the range-partitioning jobs of a clustered layout) and commit its
+    manifest; ``rows``/``cells`` are the caller's counts of ``part``."""
+    t0 = time.time()
+    data_dir = os.path.join(path, "data", f"snap={snapshot_id}")
     towrite = part
     if cluster is not None:
         # range-partition so each of the batch's files covers a
@@ -397,24 +388,6 @@ def _commit_one(part, path, data_dir, snapshot_id, parent, batch,
         .partitionBy("zoom", "cell_bucket")
         .parquet(data_dir)
     )
-    # per-tile lineage from the same cached rows that were written
-    # (an empty batch - e.g. a single-tile cube missing a residue
-    # class - writes only _SUCCESS, which parquet can't re-read;
-    # stats from the cached slice side-step that entirely)
-    lineage = part.groupBy(
-        "zoom", "cell_bucket", "tile_id", "group_key"
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("h").cast("long") * F.col("w")).alias("n_cells"),
-        F.min("min_seq").alias("min_seq"),
-        F.max("max_seq").alias("max_seq"),
-    )
-    lin_dir = os.path.join(path, "lineage", f"snap={snapshot_id}")
-    lineage.write.mode("overwrite").parquet(lin_dir)
-    stats = part.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("h").cast("long") * F.col("w")).alias("cells"),
-    ).collect()[0]
     manifest = {
         "snapshot_id": snapshot_id,
         "parent_id": parent,
@@ -424,17 +397,17 @@ def _commit_one(part, path, data_dir, snapshot_id, parent, batch,
         "n_buckets": n_buckets,
         "commit_batches": commit_batches,
         "data_dir": f"data/snap={snapshot_id}",
-        "lineage_dir": f"lineage/snap={snapshot_id}",
         "files": _collect_file_stats(data_dir, path),
         "metrics": {
-            "rows": int(stats["rows"] or 0),
-            "cells": int(stats["cells"] or 0),
+            "rows": rows,
+            "cells": cells,
             "wall_sec": round(time.time() - t0, 3),
         },
     }
     _commit_manifest(path, manifest)
     report.committed_snapshots.append(snapshot_id)
     report.metrics[snapshot_id] = manifest["metrics"]
+
 
 def _active_manifests(manifests: list[dict]) -> list[dict]:
     """Reads start at the LAST compaction snapshot in the (possibly
@@ -481,16 +454,16 @@ def read_cube(spark: SparkSession, path: str, *,
     if not manifests:
         raise FileNotFoundError(f"no committed snapshots under {path}")
 
-    def _dirs(ms, key):
+    def _dirs(ms):
         return [
-            os.path.join(path, m[key])
+            os.path.join(path, m["data_dir"])
             for m in ms
             if m.get("metrics", {}).get("rows", 1) > 0
         ]
 
-    dirs = _dirs(manifests, "data_dir")
+    dirs = _dirs(manifests)
     if not dirs:
-        later = _dirs(all_manifests, "data_dir")
+        later = _dirs(all_manifests)
         if as_of is not None and later:
             # the table WAS empty at as_of: empty frame, real schema
             return (
@@ -503,28 +476,20 @@ def read_cube(spark: SparkSession, path: str, *,
 
 def read_lineage(spark: SparkSession, path: str, *,
                  as_of=None) -> DataFrame:
-    all_manifests = _list_manifests(path)
-    manifests = _active_manifests(_as_of_prefix(all_manifests, as_of))
-    if not manifests:
-        raise FileNotFoundError(f"no committed snapshots under {path}")
-
-    def _dirs(ms):
-        return [
-            os.path.join(path, m["lineage_dir"])
-            for m in ms
-            if m.get("metrics", {}).get("rows", 1) > 0
-        ]
-
-    dirs = _dirs(manifests)
-    if not dirs:
-        later = _dirs(all_manifests)
-        if as_of is not None and later:
-            return (
-                spark.read.option("basePath", path)
-                .parquet(later[0]).limit(0)
-            )
-        raise FileNotFoundError(f"all committed snapshots empty: {path}")
-    return spark.read.option("basePath", path).parquet(*dirs)
+    """Per-tile lineage (``LINEAGE_COLS``) of the committed table, or
+    of the table ``as_of`` a snapshot: a view over the data itself,
+    since every chunk row carries its tile, group, shape and input
+    ``seq`` range (column pruning leaves ``values`` unread). A tile
+    lives in exactly one active snapshot, so this is the same per-
+    snapshot aggregate a separate lineage table would hold."""
+    return read_cube(spark, path, as_of=as_of).groupBy(
+        "zoom", "cell_bucket", "tile_id", "group_key"
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        _sum_cells().alias("n_cells"),
+        F.min("min_seq").alias("min_seq"),
+        F.max("max_seq").alias("max_seq"),
+    )
 
 
 def read_cube_window(spark: SparkSession, path: str, geobox,
@@ -724,36 +689,30 @@ def compact_snapshots(spark: SparkSession, path: str) -> WriteReport:
         report.skipped_snapshots.append(last["snapshot_id"])
         return report  # already compact: nothing newer to fold in
     df = read_cube(spark, path)
-    n_buckets = last["n_buckets"]
+    cluster = last.get("cluster")
+    # a clustered layout is not repartitioned here: _commit_one
+    # re-applies the hilbert range sort (cluster_key is already a data
+    # column), so the rewrite stays skippable after compaction
+    if not cluster:
+        df = df.repartition(max(1, int(last["n_buckets"])), "cell_bucket")
+    # the rewrite IS the active snapshots' rows, so their counts sum
+    active = _active_manifests(manifests)
     report = WriteReport(path=path)
-    t0 = time.time()
     # numeric batch suffix 999999 keeps the manifest name inside the
     # (millis, batch) sort contract and after same-millis batches
     snapshot_id = f"{int(time.time() * 1000)}-999999"
-    data_dir = os.path.join(path, "data", f"snap={snapshot_id}")
-    cluster = last.get("cluster")
-    if cluster:
-        # clustered layout: _commit_one re-applies the hilbert range
-        # sort (cluster_key is already a data column), so the rewrite
-        # stays skippable after compaction
-        part = df.persist()
-    else:
-        part = df.repartition(
-            max(1, int(n_buckets)), "cell_bucket"
-        ).persist()
-    try:
-        _commit_one(
-            part, path, data_dir, snapshot_id, last["snapshot_id"],
-            -1, n_buckets, last["commit_batches"], t0, report,
-            kind="compaction", cluster=cluster,
-        )
-    finally:
-        part.unpersist()
+    _commit_one(
+        df, path, snapshot_id, last["snapshot_id"],
+        -1, last["n_buckets"], last["commit_batches"],
+        sum(m["metrics"]["rows"] for m in active),
+        sum(m["metrics"]["cells"] for m in active),
+        report, kind="compaction", cluster=cluster,
+    )
     return report
 
 
 def expire_snapshots(path: str) -> list[str]:
-    """Drop manifests + data/lineage dirs superseded by the LAST
+    """Drop manifests + data dirs superseded by the LAST
     compaction (Iceberg ``expire_snapshots``): reclaims the space of
     the folded history at the cost of time travel to ids before the
     compaction (which then raise unknown-snapshot, as after Iceberg
@@ -771,11 +730,7 @@ def expire_snapshots(path: str) -> list[str]:
     expired = []
     for m in dead:
         sid = str(m["snapshot_id"])
-        for key in ("data_dir", "lineage_dir"):
-            if m.get(key):
-                shutil.rmtree(
-                    os.path.join(path, m[key]), ignore_errors=True
-                )
+        shutil.rmtree(os.path.join(path, m["data_dir"]), ignore_errors=True)
         try:
             os.remove(os.path.join(mdir, f"snapshot-{sid}.json"))
         except FileNotFoundError:

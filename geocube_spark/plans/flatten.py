@@ -12,7 +12,7 @@ truncates lineage to a materialized result.
 
 Two modes:
 
-* **local** (default): ``localCheckpoint(eager=True)`` — executor-
+* **local** (default): an eager ``localCheckpoint()`` — executor-
   memory blocks, zero I/O, perfect for local[n] and short-lived jobs.
   NOT fault-tolerant: on a real cluster an executor loss discards
   blocks whose lineage no longer exists, killing the job mid-loop.
@@ -81,12 +81,12 @@ def reliable_checkpoints(path: str):
         _CHECKPOINT_DIR = prev
 
 
-def flatten(df: DataFrame, *, eager: bool = True) -> DataFrame:
+def flatten(df: DataFrame) -> DataFrame:
     """Truncate ``df``'s lineage: ``localCheckpoint`` in local mode,
     parquet write+read when a reliable directory is configured."""
     d = get_checkpoint_dir()
     if d is None:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint()
     path = os.path.join(d, f"flat-{uuid.uuid4().hex}")
     df.write.mode("error").parquet(path)
     _CREATED.append(path)

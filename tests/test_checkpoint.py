@@ -95,17 +95,15 @@ def test_kill_resume_skips_committed_batches(spark, cube, tmp_path):
     assert CP.read_cube(spark, path).count() == full
 
 
-def test_resume_verify_input_fingerprint(spark, cube, tmp_path):
-    """verify_input=True: resuming against CHANGED upstream data raises
-    instead of committing a cube whose batches came from different
-    inputs; unchanged data resumes normally."""
+def test_resume_checks_input_fingerprint(spark, cube, tmp_path):
+    """Every resume is verified: resuming against CHANGED upstream data
+    raises instead of committing a cube whose batches came from
+    different inputs; unchanged data resumes normally."""
     path = str(tmp_path / "cube")
     with pytest.raises(RuntimeError, match="injected failure"):
         CP.write_cube(cube.chunks, path, commit_batches=4, fail_after=2)
-    # same input: resume passes with verification on
-    report = CP.write_cube(
-        cube.chunks, path, commit_batches=4, verify_input=True
-    )
+    # same input: resume passes verification
+    report = CP.write_cube(cube.chunks, path, commit_batches=4)
     assert sorted(report.skipped_snapshots) == [0, 1]
 
     # changed input (drop some rows): verification must catch it
@@ -115,9 +113,36 @@ def test_resume_verify_input_fingerprint(spark, cube, tmp_path):
     changed = cube.chunks.filter("tile_id % 7 != 3")
     assert changed.count() < cube.chunks.count()
     with pytest.raises(ValueError, match="resume input mismatch"):
-        CP.write_cube(
-            changed, path2, commit_batches=4, verify_input=True
-        )
+        CP.write_cube(changed, path2, commit_batches=4)
+
+
+def test_rewrite_after_compaction_skips_every_batch(spark, cube, tmp_path):
+    """The compaction manifest (batch -1, metrics summed over the
+    folded batches) is not a batch of the input: rewriting unchanged
+    chunks after a compaction passes verification and skips all."""
+    path = str(tmp_path / "cube")
+    CP.write_cube(cube.chunks, path, commit_batches=2)
+    CP.compact_snapshots(spark, path)
+    report = CP.write_cube(cube.chunks, path, commit_batches=2)
+    assert report.committed_snapshots == []
+    assert sorted(report.skipped_snapshots) == [0, 1]
+
+
+def test_sink_costs_one_job_per_batch(spark, cube, tmp_path):
+    """Plan shape of the sink: one aggregate per call serves the
+    manifest metrics and resume checks, so each extra commit batch
+    adds exactly one Spark job (its data write)."""
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (1, 4):
+        group = f"test-sink-jobs-{n}-{os.getpid()}"
+        sc.setJobGroup(group, f"write with commit_batches={n}", False)
+        try:
+            cube.write(str(tmp_path / f"cube{n}"), commit_batches=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] - jobs[1] == 3, jobs
 
 
 def test_resume_rejects_changed_parameters(spark, cube, tmp_path):

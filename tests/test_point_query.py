@@ -198,7 +198,7 @@ def test_plan_pure_catalyst_no_cartesian(spark, cube):
     # stages don't appear in the plan under test — point_query itself
     # must add zero Python
     mat = GeoCube(
-        chunks=cube.chunks.localCheckpoint(eager=True),
+        chunks=cube.chunks.localCheckpoint(),
         geobox=cube.geobox, bands=cube.bands, group_by=cube.group_by,
         group_keys=cube.group_keys, tile_size=cube.tile_size,
         fill=cube.fill,

@@ -128,6 +128,7 @@ def test_grouped_cube(spark):
 # categorical enums (reference vector_to_cube.py:120-138)
 # ---------------------------------------------------------------------------
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_categorical(spark):
     pdf = datagen.flat_polygon_docs()
     soil_types = ["sand", "silt", "clay", "frank", "silt", "clay", "sand"]
