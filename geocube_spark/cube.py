@@ -1995,24 +1995,23 @@ def _interpolate_na_tiled(cube: GeoCube) -> GeoCube:
             return F.size(F.filter(col, lambda x: ~F.isnan(x)))
         return F.size(F.filter(col, lambda x: x != F.lit(nod)))
 
-    meta = {}
+    nd = F.lit(0)
+    for m in fills:
+        nd = F.when(F.col("measurement") == m, _is_data(m)).otherwise(nd)
+    meta, counts = {}, {}
     for r_ in src.groupBy("measurement", "__g").agg(
         F.max("zoom").alias("zoom"),
         F.sum("n_geoms").alias("ng"),
         F.min("min_seq").alias("mn"),
         F.max("max_seq").alias("mx"),
+        F.sum(nd).alias("nd"),
     ).collect():
-        meta[(r_["measurement"], r_["__g"])] = (
-            int(r_["zoom"]), int(r_["ng"]), int(r_["mn"]),
-            int(r_["mx"]))
+        key = (r_["measurement"], r_["__g"])
+        meta[key] = (int(r_["zoom"]), int(r_["ng"]), int(r_["mn"]),
+                     int(r_["mx"]))
+        counts[key] = int(r_["nd"] or 0)
     if not meta:
         return cube
-    counts = {}
-    for m in {k[0] for k in meta}:
-        for r_ in (src.filter(F.col("measurement") == m)
-                   .groupBy("__g")
-                   .agg(F.sum(_is_data(m)).alias("nd")).collect()):
-            counts[(m, r_["__g"])] = int(r_["nd"] or 0)
 
     bands_df = spark.createDataFrame(sorted(meta),
                                      "measurement string, __g string")

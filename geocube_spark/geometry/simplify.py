@@ -103,38 +103,37 @@ def simplify_wkb(blob, tolerance: float):
 # convex hull (geopandas ``.convex_hull`` parity)
 # ---------------------------------------------------------------------------
 
-def convex_hull_points(pts: np.ndarray) -> np.ndarray:
-    """Andrew's monotone chain -> CCW hull ring (closed, first ==
-    last). Input order/duplicates don't matter. Degenerate inputs
-    (all collinear) return the 2-point extreme chain unclosed."""
-    pts = np.unique(
-        np.asarray(pts, dtype=np.float64).reshape(-1, 2), axis=0
-    )
-    n = len(pts)
-    if n <= 2:
+def convex_hull(px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Andrew's monotone chain -> (k, 2) CCW hull vertices, unclosed.
+    Input order/duplicates don't matter. Collinear inputs give the
+    2-point extreme segment; k may be 1 or 2 for degenerate inputs."""
+    # np.unique sorts the rows lexicographically (x, then y)
+    pts = np.unique(np.column_stack([px, py]).astype(np.float64), axis=0)
+    if len(pts) <= 2:
         return pts
-    # lexicographic order (x, then y) — np.unique already sorts rows
 
-    def _chain(order):
+    def _half(seq):
         out = []
-        for p in order:
-            while len(out) >= 2:
-                ox, oy = out[-2]
-                ax, ay = out[-1]
-                if (ax - ox) * (p[1] - oy) - (ay - oy) * (p[0] - ox) <= 0:
-                    out.pop()
-                else:
-                    break
-            out.append((p[0], p[1]))
+        for p in seq:
+            while len(out) >= 2 and _cross(out[-2], out[-1], p) <= 0:
+                out.pop()
+            out.append(p)
         return out[:-1]
 
-    lower = _chain(pts)
-    upper = _chain(pts[::-1])
-    ring = lower + upper
-    if len(ring) < 3:  # collinear
-        return np.array([pts[0], pts[-1]])
-    ring.append(ring[0])
-    return np.asarray(ring, dtype=np.float64)
+    return np.asarray(_half(pts) + _half(pts[::-1]), dtype=np.float64)
+
+
+def _cross(o, a, p):
+    return (a[0] - o[0]) * (p[1] - o[1]) - (a[1] - o[1]) * (p[0] - o[0])
+
+
+def convex_hull_points(pts: np.ndarray) -> np.ndarray:
+    """:func:`convex_hull` of ``(n, 2)`` points as a CCW hull ring,
+    closed (first == last) when it has 3+ vertices. Degenerate inputs
+    (all collinear) return the 2-point extreme chain unclosed."""
+    pts = np.asarray(pts, dtype=np.float64).reshape(-1, 2)
+    hull = convex_hull(pts[:, 0], pts[:, 1])
+    return np.vstack([hull, hull[:1]]) if len(hull) >= 3 else hull
 
 
 def convex_hull_wkb(blob):

@@ -46,38 +46,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..geometry.simplify import convex_hull  # noqa: F401 (the band hull)
 from .delaunay import Triangulation, _batch_circum
-
-
-def convex_hull(px: np.ndarray, py: np.ndarray) -> np.ndarray:
-    """Andrew monotone chain; returns (k, 2) CCW hull vertices
-    (collinear inputs give the 2-point extreme segment; k may be 1 or
-    2 for degenerate inputs)."""
-    pts = np.column_stack([
-        np.asarray(px, dtype=np.float64),
-        np.asarray(py, dtype=np.float64),
-    ])
-    pts = np.unique(pts, axis=0)  # sorts lexicographically
-    n = len(pts)
-    if n <= 2:
-        return pts
-
-    def _half(seq):
-        out = []
-        for p in seq:
-            while len(out) >= 2:
-                o, a = out[-2], out[-1]
-                if (a[0] - o[0]) * (p[1] - o[1]) - \
-                        (a[1] - o[1]) * (p[0] - o[0]) <= 0:
-                    out.pop()
-                else:
-                    break
-            out.append(p)
-        return out
-
-    lower = _half(pts)
-    upper = _half(pts[::-1])
-    return np.asarray(lower[:-1] + upper[:-1], dtype=np.float64)
 
 
 def strictly_outside(hull: np.ndarray, qx: np.ndarray, qy: np.ndarray,

@@ -297,7 +297,8 @@ def write_cube(
                 f"commit_batches={commit_batches}. Use the original "
                 "parameters or write to a fresh path"
             )
-    done_batches = {m["batch"] for m in prior}
+    committed = list(_batch_records(prior))
+    done_batches = {batch for batch, _, _ in committed}
     _gc_uncommitted(path, {str(m["snapshot_id"]) for m in prior})
 
     withb = chunks.withColumn(
@@ -329,18 +330,14 @@ def write_cube(
         # resume fingerprint: a committed batch must cover exactly the
         # rows/cells the current input yields for it, else the upstream
         # data changed and skipping it would mix two inputs
-        for m in prior:
-            if m.get("kind") == "compaction":
-                continue  # batch -1: its metrics span the folded batches
-            want = m.get("metrics", {})
-            got = stats.get(m["batch"], (0, 0))
-            if got != (want.get("rows"), want.get("cells")):
+        for batch, rows, cells in committed:
+            got = stats.get(batch, (0, 0))
+            if got != (rows, cells):
                 raise ValueError(
                     f"resume input mismatch at {path}: committed batch "
-                    f"{m['batch']} covered rows/cells {want.get('rows')}"
-                    f"/{want.get('cells')} but the current input yields "
-                    f"{got[0]}/{got[1]} — the upstream data changed; "
-                    "write to a fresh path"
+                    f"{batch} covered rows/cells {rows}/{cells} but the "
+                    f"current input yields {got[0]}/{got[1]} — the "
+                    "upstream data changed; write to a fresh path"
                 )
 
         report = WriteReport(path=path)
@@ -367,11 +364,12 @@ def write_cube(
 
 
 def _commit_one(part, path, snapshot_id, parent, batch, n_buckets,
-                commit_batches, rows, cells, report, kind=None,
-                cluster=None):
+                commit_batches, rows, cells, report, cluster=None,
+                **extra):
     """Write ``part`` as snapshot ``snapshot_id`` (one Spark job, or
     the range-partitioning jobs of a clustered layout) and commit its
-    manifest; ``rows``/``cells`` are the caller's counts of ``part``."""
+    manifest; ``rows``/``cells`` are the caller's counts of ``part``,
+    ``extra`` further manifest fields."""
     t0 = time.time()
     data_dir = os.path.join(path, "data", f"snap={snapshot_id}")
     towrite = part
@@ -392,7 +390,7 @@ def _commit_one(part, path, snapshot_id, parent, batch, n_buckets,
         "snapshot_id": snapshot_id,
         "parent_id": parent,
         "batch": batch,
-        **({"kind": kind} if kind else {}),
+        **extra,
         **({"cluster": cluster} if cluster else {}),
         "n_buckets": n_buckets,
         "commit_batches": commit_batches,
@@ -407,6 +405,19 @@ def _commit_one(part, path, snapshot_id, parent, batch, n_buckets,
     _commit_manifest(path, manifest)
     report.committed_snapshots.append(snapshot_id)
     report.metrics[snapshot_id] = manifest["metrics"]
+
+
+def _batch_records(manifests: list[dict]):
+    """``(batch, rows, cells)`` of every committed batch the manifests
+    cover: a batch manifest's own counts, and the folded batches a
+    compaction manifest records (one written before compactions
+    recorded them covers none)."""
+    for m in manifests:
+        if m.get("kind") == "compaction":
+            for f in m.get("folded_batches", ()):
+                yield f["batch"], f["rows"], f["cells"]
+        else:
+            yield m["batch"], m["metrics"]["rows"], m["metrics"]["cells"]
 
 
 def _active_manifests(manifests: list[dict]) -> list[dict]:
@@ -678,8 +689,10 @@ def compact_snapshots(spark: SparkSession, path: str) -> WriteReport:
 
     Time travel to ids before the compaction keeps working (old dirs
     stay on disk) until ``expire_snapshots`` reclaims them. Appending
-    with ``write_cube`` afterwards also keeps working: batch
-    bookkeeping and resume parameters are preserved verbatim."""
+    with ``write_cube`` afterwards also keeps working: resume
+    parameters are preserved verbatim, and ``folded_batches`` records
+    each folded batch's rows and cells, so a rewrite skips and checks
+    them even after ``expire_snapshots`` removed their manifests."""
     manifests = _list_manifests(path)
     if not manifests:
         raise FileNotFoundError(f"no committed snapshots under {path}")
@@ -706,7 +719,9 @@ def compact_snapshots(spark: SparkSession, path: str) -> WriteReport:
         -1, last["n_buckets"], last["commit_batches"],
         sum(m["metrics"]["rows"] for m in active),
         sum(m["metrics"]["cells"] for m in active),
-        report, kind="compaction", cluster=cluster,
+        report, cluster=cluster, kind="compaction",
+        folded_batches=[{"batch": b, "rows": r, "cells": c}
+                        for b, r, c in _batch_records(active)],
     )
     return report
 

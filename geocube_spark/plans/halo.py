@@ -9,7 +9,8 @@ donor is copied to each tile whose halo covers its bucket. One round:
     unresolved tiles -> explode to the clamped bucket span +- r
       -> ONE left equi-join with the bucketed donors
       -> ONE grouped map per tile: the caller's kernel + certificate
-      -> anti-join the certified tiles, count what is left
+      -> materialize that output once; its uncertified rows (counted)
+         name the next round's tiles
 
 Uncertified tiles double the halo, and the last round of the default
 schedule gathers the whole band, so a certificate that holds on the
@@ -56,6 +57,7 @@ TILE_KEYS = ["measurement", "__g", "tile_id", "row0", "col0", "h", "w",
              "b0i", "b1i", "b0j", "b1j"]
 Tile = namedtuple("Tile", "m g tile_id row0 col0 h w b0i b1i b0j b1j")
 _JOIN_KEYS = ["measurement", "__g", "bi", "bj"]
+_TILE_ID = ["measurement", "__g", "tile_id"]
 
 
 def gathered_rect(affine, cell, lo_i, hi_i, lo_j, hi_j, n_i, n_j):
@@ -110,7 +112,8 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     n_geoms, min_seq, max_seq)`` for the chunk rows. ``schedule``
     lists one halo radius per round, in buckets, as ``r`` or ``(r_i,
     r_j)``; the default doubles from 1 and gathers the whole band in
-    round :data:`HALO_ROUNDS`."""
+    round :data:`HALO_ROUNDS`. ``tiles`` stays lazy: the next round's
+    tiles are a semi-join of it with this round's uncertified rows."""
     from ..cube import CHUNK_SCHEMA, _chunk_row
     from ..grid.geobox import GeoBox
     from .flatten import _flat
@@ -148,7 +151,7 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
 
         return _eval
 
-    unresolved = tiles.select(*TILE_KEYS).transform(_flat)
+    unresolved = tiles = tiles.select(*TILE_KEYS)
     resolved = []
     for round_i, r in enumerate(schedule):
         r_i, r_j = r if isinstance(r, tuple) else (r, r)
@@ -161,21 +164,19 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
             .applyInPandas(_round(r_i, r_j), schema=eval_schema)
             .transform(_flat)
         )
-        done = out.filter(F.col("ok"))
-        resolved.append(done.select(*CHUNK_SCHEMA.names))
-        unresolved = unresolved.join(
-            done.select("measurement", "__g", "tile_id"),
-            ["measurement", "__g", "tile_id"], "left_anti",
-        ).transform(_flat)
-        n_left = unresolved.count()
+        resolved.append(out.filter(F.col("ok")).select(*CHUNK_SCHEMA.names))
+        left = out.filter(~F.col("ok")).select(*_TILE_ID)
+        n_left = left.count()
         logger.debug("%s round %d (halo r=%s buckets): %d tiles "
                      "unresolved", label, round_i + 1, r, n_left)
         if n_left == 0:
             return functools.reduce(DataFrame.unionByName, resolved)
+        # at most one row per tile: broadcast, so the plan stays static
+        unresolved = tiles.join(F.broadcast(left), _TILE_ID, "left_semi")
     bands = sorted(
         ((b["measurement"], None if b["__g"] == NO_GROUP else b["__g"])
-         for b in unresolved.select("measurement", "__g").distinct()
-         .collect()), key=str,
+         for b in left.select("measurement", "__g").distinct().collect()),
+        key=str,
     )
     raise GeoCubeError(
         f"{label}: {n_left} tile(s) still uncertified after the last "

@@ -116,16 +116,23 @@ def test_resume_checks_input_fingerprint(spark, cube, tmp_path):
         CP.write_cube(changed, path2, commit_batches=4)
 
 
-def test_rewrite_after_compaction_skips_every_batch(spark, cube, tmp_path):
+@pytest.mark.parametrize("expire", [False, True])
+def test_rewrite_after_compaction_skips_every_batch(spark, cube, tmp_path,
+                                                   expire):
     """The compaction manifest (batch -1, metrics summed over the
-    folded batches) is not a batch of the input: rewriting unchanged
-    chunks after a compaction passes verification and skips all."""
+    folded batches) is not a batch of the input, but it records the
+    batches it folds: rewriting unchanged chunks after a compaction,
+    and after expiring the folded snapshots, passes verification,
+    skips all and leaves the table's rows unchanged."""
     path = str(tmp_path / "cube")
     CP.write_cube(cube.chunks, path, commit_batches=2)
     CP.compact_snapshots(spark, path)
+    if expire:
+        assert len(CP.expire_snapshots(path)) == 2
     report = CP.write_cube(cube.chunks, path, commit_batches=2)
     assert report.committed_snapshots == []
     assert sorted(report.skipped_snapshots) == [0, 1]
+    assert CP.read_cube(spark, path).count() == cube.chunks.count()
 
 
 def test_sink_costs_one_job_per_batch(spark, cube, tmp_path):

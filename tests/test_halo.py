@@ -1,18 +1,22 @@
 """The halo engine shared by the tiled interpolators (plans/halo.py):
 the gathered-rectangle edge rule, fail-fast on tiles that never
-certify, and grouped maps that emit no eval-type warnings."""
+certify, the job cost of a round, and grouped maps that emit no
+eval-type warnings."""
 
+import os
 import warnings
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 import pytest
 
 from geocube_spark.cube import _forced_engine, _tiles_frame, make_geocube
 from geocube_spark.exceptions import GeoCubeError
 from geocube_spark.geometry import wkb as W
 from geocube_spark.grid.geobox import GeoBox
-from geocube_spark.plans.halo import gathered_rect, halo_resolve
+from geocube_spark.plans.halo import (HALO_ROUNDS, gathered_rect,
+                                      halo_resolve)
 
 
 class _Aff:
@@ -67,6 +71,75 @@ def test_halo_raises_when_never_certified(spark):
         halo_resolve(tiles, donors, gb.to_dict(), 4,
                      {("value", "\x00"): (0, 2, 0, 1)}, never,
                      label="never")
+
+
+def test_halo_round_costs_one_materialization(spark):
+    """Plan shape of the halo loop: a tile certifies in the first round
+    whose gathered rectangle spans 2 * 2**(k-1) + 1 buckets on both
+    axes (an unbounded side counts as wide), so interior tiles need k
+    rounds. Every tile comes back once, with the values of the round
+    that certified it, and each round costs a bounded number of jobs."""
+    gb = GeoBox.from_bounds((0.0, 0.0, 40.0, 40.0), (-1.0, 1.0),
+                            "EPSG:4326")
+    cell = 4
+    bands = spark.createDataFrame([("value", "\x00")],
+                                  "measurement string, __g string")
+    tiles = _tiles_frame(spark, gb.to_dict(), cell, cell, bands)
+    # hinted, so the donor join is planned statically: a donor frame
+    # without size stats lets adaptive execution pick the join at run
+    # time, and the job count then varies with stage timing
+    donors = F.broadcast(spark.createDataFrame(
+        [("value", "\x00", 0, 0, 0, 1.0)],
+        "measurement string, __g string, bi int, bj int, seq long, "
+        "v double"))
+    n_tiles, ntx, _ = gb.n_tiles(cell)
+    n_b = -(-gb.width // cell)
+    radii = [2 ** i for i in range(HALO_ROUNDS - 1)] + [n_b]
+
+    def extents(rect):
+        x0, x1, y0, y1 = rect
+        return x1 - x0, y1 - y0
+
+    def certifying(k):
+        wide = (2 * 2 ** (k - 1) + 1) * cell
+
+        def evaluate(t, rows, gx, gy, rect):
+            values = np.zeros(t.h * t.w)
+            values[:3] = (t.tile_id, *extents(rect))
+            return values, min(extents(rect)) >= wide
+
+        return evaluate, wide
+
+    sc = spark.sparkContext
+    jobs = {}
+    for k in (1, 2, 3):
+        evaluate, wide = certifying(k)
+        group = f"test-halo-jobs-{k}-{os.getpid()}"
+        sc.setJobGroup(group, f"halo resolve in {k} round(s)", False)
+        try:
+            out = halo_resolve(tiles, donors, gb.to_dict(), cell,
+                               {("value", "\x00"): (0, 1, 0, 0)},
+                               evaluate, label=f"rounds-{k}")
+            assert out.count() == n_tiles
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[k] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows = out.collect()
+        assert sorted(r["tile_id"] for r in rows) == list(range(n_tiles))
+        last_round = 0
+        for row in rows:
+            ti, tj = divmod(row["tile_id"], ntx)
+            for round_i, r in enumerate(radii, 1):
+                rect = gathered_rect(gb.affine, cell, ti - r, ti + r,
+                                     tj - r, tj + r, n_b, n_b)
+                if min(extents(rect)) >= wide:
+                    break
+            last_round = max(last_round, round_i)
+            assert list(row["values"][:3]) == [row["tile_id"],
+                                               *extents(rect)]
+        assert last_round == k
+    assert jobs[1] <= 8, jobs
+    assert jobs[2] - jobs[1] <= 8 and jobs[3] - jobs[2] <= 8, jobs
 
 
 def test_tiled_paths_emit_no_eval_type_warning(spark):
