@@ -314,23 +314,20 @@ class GeoCube:
 
         return diff_cubes(self, other, mode)
 
-    def region_group(self, band: str, *, name: str = None,
-                     driver_cap: int = 200_000):
+    def region_group(self, band: str, *, name: str = None):
         """Global 4-connected equal-value component labels (ESRI
         RegionGroup); canonical min-cell-id labels, NaN outside data."""
         from .regions import region_group
 
-        return region_group(self, band, name=name,
-                            driver_cap=driver_cap)
+        return region_group(self, band, name=name)
 
     def sieve(self, band: str, min_size: int, *, passes: int = 1,
-              name: str = None, driver_cap: int = 200_000):
+              name: str = None):
         """GDAL SieveFilter: sub-threshold components take their
         largest neighbor's value (see regions.sieve)."""
         from .regions import sieve
 
-        return sieve(self, band, min_size, passes=passes, name=name,
-                     driver_cap=driver_cap)
+        return sieve(self, band, min_size, passes=passes, name=name)
 
     def warp(self, like, *, method: str = "nearest", tile_size=None):
         """Regrid onto another grid (GeoBox / dict / .tif / .nc path),

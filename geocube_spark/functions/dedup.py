@@ -56,6 +56,7 @@ MERSENNE31 = (1 << 31) - 1  # 2147483647
 # shingle strings is ~40-75 MB; token vocabularies (the high-hit-rate
 # case) are orders of magnitude smaller and always fit.
 import hashlib as _hashlib
+from ..plans.components import components
 from ..plans.flatten import _flat
 
 _H60_CACHE: dict = {}
@@ -682,22 +683,21 @@ def simhash_near_pairs(df: DataFrame = None, *, max_hamming: int = 8,
 
 def near_dup_clusters(df: DataFrame, *, pairs: DataFrame = None,
                       max_hamming: int = 5, bands: int = 6,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      max_iters: int = 20,
-                      driver_cap: int = 200_000) -> DataFrame:
+                      text_col: str = "text", id_col: str = "doc_id"
+                      ) -> DataFrame:
     """Fuzzy-dedup compaction: cluster near-duplicate documents and
     mark one representative to keep per cluster.
 
     ``pairs`` is any (id_a, id_b) near-dup pair frame (from
     ``simhash_near_pairs``, ``minhash_lsh_pairs`` or
     ``ngram_jaccard_pairs``); by default SimHash pairs are computed
-    from ``df``. Connected components run as distributed min-label
-    propagation with pointer jumping over the EDGE set — O(log
-    diameter) label-stable rounds, each a couple of edge-sized
-    shuffles, no driver adjacency and nothing quadratic — so a corpus
-    with bounded near-dup chains clusters in a handful of rounds
-    regardless of corpus size (same scheme as
-    ``vector._propagate_labels``).
+    from ``df``. Connected components run on the pair (EDGE) set
+    through ``plans.components``: a driver union-find for a small
+    pair set (one collect of the pairs — edge count, never corpus
+    count), min-label propagation with pointer jumping above it (no
+    driver adjacency, nothing quadratic; rounds grow with the longest
+    near-dup chain, and a chain past the round budget raises
+    ``GeoCubeError`` rather than returning split clusters).
 
     Output, one row per input document:
 
@@ -707,110 +707,14 @@ def near_dup_clusters(df: DataFrame, *, pairs: DataFrame = None,
     * ``keep`` — true for the cluster's representative: longest text,
       ties broken by smallest id (the usual training-data rule of
       keeping the fullest variant of a duplicated page).
-
-    Edge sets up to ``driver_cap`` rows are clustered with a driver
-    union-find (one collect of the PAIRS — edge count, never corpus
-    count — then a broadcast label map); larger edge sets run the
-    distributed propagation. Same escape-hatch design as
-    ``vector.vectorize_tiled``: the label-propagation loop costs
-    several shuffle rounds of latency that dwarf a tiny edge list.
     """
     if pairs is None:
         pairs = simhash_near_pairs(
             df, max_hamming=max_hamming, bands=bands,
             text_col=text_col, id_col=id_col,
         )
-    edges = pairs.select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    ).persist()
-    n_edges = edges.count()
-    spark = df.sparkSession
-
-    if n_edges <= driver_cap:
-        # one collect job over the (persisted) edge list — edge count,
-        # never corpus count, and bounded by driver_cap rows of two ids
-        edge_rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in edge_rows:
-            a, b = row["a"], row["b"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so the root IS the cluster id
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        edges.unpersist()
-        id_type = edges.schema["a"].dataType
-        labels = spark.createDataFrame(
-            rows,
-            T.StructType([
-                T.StructField("node", id_type),
-                T.StructField("label", id_type),
-            ]),
-        )
-        return _cluster_output(df, labels, text_col, id_col)
-
-    adj = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).persist()
-    # every round references the previous labels frame several times
-    # (propagation join, the pointer-jump self-join, the convergence
-    # diff), so carrying lineage across rounds would grow the logical
-    # plan ~4x per round — localCheckpoint() truncates it and caches
-    # the round's result (on a cluster, set a checkpoint dir and use
-    # checkpoint() if executor loss must be survivable mid-loop).
-    labels = (
-        adj.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .transform(_flat)
-    )
-    for _ in range(max_iters):
-        prop = (
-            adj.alias("e")
-            .join(labels.alias("l"), F.col("e.a") == F.col("l.node"))
-            .select(F.col("e.b").alias("node"),
-                    F.col("l.label").alias("label"))
-        )
-        merged = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jumping: label <- label(label)
-        jumped = (
-            merged.alias("m")
-            .join(merged.alias("p"),
-                  F.col("m.label") == F.col("p.node"), "left")
-            .select(
-                F.col("m.node").alias("node"),
-                F.coalesce(F.col("p.label"), F.col("m.label"))
-                .alias("label"),
-            )
-            .transform(_flat)
-        )
-        changed = (
-            jumped.alias("j")
-            .join(labels.alias("o"), F.col("j.node") == F.col("o.node"))
-            .filter(F.col("j.label") != F.col("o.label"))
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-    adj.unpersist()
-    edges.unpersist()
+    labels = components(pairs.select(F.col("id_a").alias("a"),
+                                     F.col("id_b").alias("b")))
     return _cluster_output(df, labels, text_col, id_col)
 
 

@@ -1,9 +1,10 @@
 """Graph analytics as iterative DataFrame programs.
 
 The package already carries several graph kernels where they belong
-(connected components in ``regions``/``dedup.near_dup_clusters``,
-D8-forest closures in ``bandops``); this module holds the generic
-node-rank primitive.
+(connected components in ``plans/components.py``, used by
+``regions``, ``vector.vectorize_tiled``, ``dedup.near_dup_clusters``
+and :func:`connected_components` here; D8-forest closures in
+``bandops``); this module holds the generic node-rank primitive.
 
 PageRank (Page, Brin, Motwani & Winograd 1999 — public) with a FIXED
 iteration count: like ``pca_power_scores``, pinning the iteration
@@ -19,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from ..plans.components import propagate
 from ..plans.flatten import _flat
 
 
@@ -311,53 +313,17 @@ def connected_components(edges: DataFrame, *, max_rounds: int = 30,
     """Weakly-connected component labels of the undirected simple
     graph: every node gets the MINIMUM node id reachable from it
     (the canonical label every distributed CC formulation converges
-    to). Synchronous min-label propagation — ``label'(v) =
-    min(label(v), min_{u~v} label(u))`` — to the fixpoint, raising
-    past ``max_rounds``; rounds scale with component DIAMETER, so use
-    this for the shallow/moderate graphs it fits and the
-    pointer-jumping doubling in ``functions.dedup.near_dup_clusters``
-    (O(log n) rounds) for adversarially deep chains. Returns
-    (node, component).
-
-    Scale shape per round: one equi-join of labels onto the
-    bidirectional edge list + ONE map-side-combined min aggregate;
-    ``localCheckpoint`` bounds plan depth; the fixpoint test is a
-    LEFT-join count of changed labels (no collect of the labels)."""
+    to). Runs ``plans.components.propagate``: min-label propagation
+    with pointer jumping over the bidirectional edge list, one
+    materialization per round, to the fixpoint. Rounds grow with
+    component DIAMETER (pointer jumping never needs more than the
+    plain loop's diameter + 1), and a graph still moving labels after
+    ``max_rounds`` raises. Returns (node, component)."""
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     und = edges.select(
         F.col(src_col).cast("long").alias("a"),
         F.col(dst_col).cast("long").alias("b"),
     ).where(F.col("a") != F.col("b"))
-    e = (
-        und.unionByName(und.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b")))
-        .distinct().transform(_flat)
-    )
-    labels = e.select(F.col("a").alias("node")).distinct() \
-        .select("node", F.col("node").alias("label")) \
-        .transform(_flat)
-    for _ in range(int(max_rounds)):
-        nbr_min = (
-            labels.join(e, labels["node"] == e["a"])
-            .groupBy(F.col("b").alias("node"))
-            .agg(F.min("label").alias("nm"))
-        )
-        new = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(F.col("label"),
-                    F.coalesce(F.col("nm"), F.col("label")))
-            .alias("label"),
-        ).transform(_flat)
-        changed = new.alias("n").join(
-            labels.alias("o"), "node"
-        ).where(F.col("n.label") != F.col("o.label")) \
-            .limit(1).count()
-        labels = new
-        if not changed:
-            return labels.select(
-                "node", F.col("label").alias("component"))
-    raise RuntimeError(
-        f"connected_components did not converge within {max_rounds} "
-        "rounds; use the pointer-jumping path for deep graphs"
-    )
+    return propagate(und, (), max_rounds).select(
+        "node", F.col("label").alias("component"))

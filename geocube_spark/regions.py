@@ -26,10 +26,10 @@ Physical plan (shared, per pass):
    label-pair border counts. Cell arrays never leave the task.
 2. border probes pair up across adjacent tiles by (boundary line,
    position); same-value pairs are component-merge edges, resolved by
-   the SAME hybrid connected-components machinery as
-   ``vectorize_tiled`` (driver union-find under a cap, distributed
-   min-label propagation + pointer jumping above it) — O(components
-   touching borders), never O(cells).
+   ``plans/components.py``, the engine ``vectorize_tiled`` uses too
+   (driver union-find under its cap, distributed min-label
+   propagation + pointer jumping above it) — O(components touching
+   borders), never O(cells).
 3. global stats aggregate per component; for sieve, label-pair border
    counts map through the component labels into a component adjacency
    graph (edge set ~ O(components), shuffled as counts, never cells).
@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from .cube import CHUNK_SCHEMA, BandMeta, GeoCube
 from .kernels import vectorize as V
+from .plans.components import components
 from .plans.flatten import _flat
 
 # node id packing shared with vectorize_tiled: per-tile labels are
@@ -193,22 +194,14 @@ def _merge_pairs(stage: DataFrame) -> DataFrame:
     )
 
 
-def _components(stage: DataFrame, spark, max_iters: int,
-                driver_cap: int):
+def _components(stage: DataFrame):
     """Global components over the tile-label node graph.
 
     Returns (node_map, comp): node_map has one row per (tile, label)
     with its component's canonical id; comp has one row per component
     with canonical id, total size and value.
     """
-    from .vector import _driver_union_find_labels, _propagate_labels
-
-    pairs = _merge_pairs(stage).persist()
-    n_pairs = pairs.limit(driver_cap + 1).count()
-    if n_pairs <= driver_cap:
-        roots = _driver_union_find_labels(spark, pairs)
-    else:
-        roots = _propagate_labels(pairs, _same, max_iters)
+    roots = components(_merge_pairs(stage), ("measurement", "group_key"))
 
     labs = stage.filter(F.col("kind") == "lab").withColumn(
         "node", F.col("tile_id") * int(_L) + F.col("label")
@@ -256,7 +249,7 @@ def _components(stage: DataFrame, spark, max_iters: int,
     # materializes the few thousand rows and truncates the lineage.
     node_map = node_map.transform(_flat)
     comp = comp.transform(_flat)
-    return node_map, comp, pairs
+    return node_map, comp
 
 
 def _apply_label_map(cube: GeoCube, band: str, tile_maps: DataFrame,
@@ -338,8 +331,7 @@ def _tile_maps(mapping: DataFrame) -> DataFrame:
 
 
 def region_group(cube: GeoCube, band: str, *,
-                 name: Optional[str] = None, max_iters: int = 50,
-                 driver_cap: int = 200_000) -> GeoCube:
+                 name: Optional[str] = None) -> GeoCube:
     """Label every 4-connected run of equal-valued data cells with a
     global component id (ESRI RegionGroup / ``scipy.ndimage.label``
     over each value class). The id is canonical — the component's
@@ -347,14 +339,11 @@ def region_group(cube: GeoCube, band: str, *,
     rasters. Nodata cells get NaN."""
     if band not in cube.bands:
         raise ValueError(f"unknown band {band!r}")
-    spark = cube.chunks.sparkSession
     # stage is O(labels + perimeter) rows — materialize and truncate
     # lineage; its lazy subtree otherwise re-serializes into every
     # downstream join's task binary (measured 41.5 MiB at sf0.01)
     stage = _stage_rows(cube, band).transform(_flat)
-    node_map, _comp, pairs = _components(
-        stage, spark, max_iters, driver_cap
-    )
+    node_map, _comp = _components(stage)
     mapping = node_map.select(
         "measurement", "group_key", "tile_id", "label",
         F.col("canon").cast("double").alias("newval"),
@@ -362,7 +351,6 @@ def region_group(cube: GeoCube, band: str, *,
     # the tile map is O(labels) — materialize it eagerly so the heavy
     # per-cell stage can be released before the (lazy) output runs
     tm = _tile_maps(mapping).transform(_flat)
-    pairs.unpersist()
     return _apply_label_map(
         cube, band, tm, name or "region", float("nan"),
         keep_unmapped=False,
@@ -428,8 +416,7 @@ def _component_adjacency(stage: DataFrame, node_map: DataFrame
 
 
 def sieve(cube: GeoCube, band: str, min_size: int, *,
-          passes: int = 1, name: Optional[str] = None,
-          max_iters: int = 50, driver_cap: int = 200_000) -> GeoCube:
+          passes: int = 1, name: Optional[str] = None) -> GeoCube:
     """GDAL ``SieveFilter``: components smaller than ``min_size``
     cells take the value of their largest 4-connected neighboring
     component. Ties break by (larger shared border, smaller value,
@@ -445,19 +432,15 @@ def sieve(cube: GeoCube, band: str, min_size: int, *,
         raise ValueError("passes must be >= 1")
     from pyspark.sql import Window
 
-    spark = cube.chunks.sparkSession
     out_band = name or band
     cur = cube
     cur_band = band
     fill = float(cube.bands[band].fill)
     for _ in range(passes):
         stage = _stage_rows(cur, cur_band).transform(_flat)
-        node_map, comp, pairs = _components(
-            stage, spark, max_iters, driver_cap
-        )
+        node_map, comp = _components(stage)
         small = comp.filter(F.col("size") < min_size)
         if small.limit(1).count() == 0:
-            pairs.unpersist()
             break
         nbr = _component_adjacency(stage, node_map)
         ranked = (
@@ -494,7 +477,6 @@ def sieve(cube: GeoCube, band: str, min_size: int, *,
                     "n.label", "r.newval")
         )
         tm = _tile_maps(mapping).transform(_flat)
-        pairs.unpersist()
         nxt = _apply_label_map(
             cur, cur_band, tm, out_band, fill, keep_unmapped=True,
         )

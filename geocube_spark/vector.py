@@ -13,8 +13,6 @@ documented scale-up path (SURVEY.md §7 step 7).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -26,7 +24,8 @@ from .geometry import wkb as W
 from .geometry.wkb import Geometry, POLYGON
 from .grid.geobox import GeoBox
 from .kernels import vectorize as V
-from .plans.flatten import _flat
+from .plans.components import components
+from .regions import _L, _merge_pairs, _same
 
 VECTOR_SCHEMA = T.StructType(
     [
@@ -117,9 +116,7 @@ TILED_VECTOR_SCHEMA = T.StructType(
 )
 
 
-def vectorize_tiled(cube: GeoCube, measurement: str = None,
-                    max_iters: int = 50,
-                    driver_cap: int = 200_000) -> DataFrame:
+def vectorize_tiled(cube: GeoCube, measurement: str = None) -> DataFrame:
     """Distributed raster -> vector: each TILE polygonizes locally
     (parallel across tiles x bands x groups), then components touching
     across tile borders are dissolved globally into single OGC
@@ -131,10 +128,9 @@ def vectorize_tiled(cube: GeoCube, measurement: str = None,
     1. border-cell rows (O(perimeter), tiny vs O(area)) pair up across
        adjacent tiles by (boundary line, position, value), yielding
        (tile,label)~(tile,label) adjacency edges as a DataFrame;
-    2. components are connected via distributed min-label propagation
-       with pointer jumping (hash-to-min style; O(log diameter)
-       rounds, each round a couple of shuffles over the EDGE set, never
-       the cell set);
+    2. components are connected by ``plans.components`` over the EDGE
+       set, never the cell set (a driver union-find for a small edge
+       set, min-label propagation with pointer jumping above it);
     3. each component's tile parts meet in one reduce task where
        opposite-direction boundary unit segments cancel (the two sides
        of an internal tile border traverse it in opposite directions)
@@ -149,8 +145,7 @@ def vectorize_tiled(cube: GeoCube, measurement: str = None,
     chunks = cube.chunks
     if measurement is not None:
         chunks = chunks.filter(F.col("measurement") == measurement)
-    spark = chunks.sparkSession
-    sc = spark.sparkContext
+    sc = chunks.sparkSession.sparkContext
 
     def _stage1(key, pdf: pd.DataFrame) -> pd.DataFrame:
         m = str(key[0])
@@ -241,57 +236,10 @@ def vectorize_tiled(cube: GeoCube, measurement: str = None,
         .persist()
     )
 
-    # adjacency: same boundary line+position+value, one side each.
-    # node id = tile_id * 2^22 + label (labels per tile are bounded by
-    # tile_area/2 << 2^22; tile ids fit 2^41)
-    _L = np.int64(1) << 22
-    edges = stage1.filter(F.col("kind") == "edge")
-    node = lambda e: F.col(f"{e}.tile_id") * int(_L) + F.col(f"{e}.label")
-    pairs = (
-        edges.groupBy("measurement", "group_key", "axis", "bcoord",
-                      "pos", "value")
-        .agg(
-            F.collect_set(
-                F.struct("side", "tile_id", "label")
-            ).alias("ends")
-        )
-        .filter(F.size("ends") == 2)
-        .select(
-            "measurement", "group_key",
-            F.element_at("ends", 1).alias("e1"),
-            F.element_at("ends", 2).alias("e2"),
-        )
-        .filter(F.col("e1.side") != F.col("e2.side"))
-        .select(
-            "measurement", "group_key",
-            node("e1").alias("a"), node("e2").alias("b"),
-        )
-        .distinct()
-    )
-
-    # distributed connected components: min-label propagation + pointer
-    # jumping over the EDGE set (never the cells). Converges in
-    # O(log diameter) label-stable rounds. group_key may be NULL
-    # (ungrouped cubes) -> every key equality is null-safe; node ids
-    # are globally unique across bands anyway, so cross-band joins on
-    # node alone cannot mix components — keys ride along for locality.
-
-    def _same(a, b):
-        return (
-            F.col(f"{a}.measurement") == F.col(f"{b}.measurement")
-        ) & F.col(f"{a}.group_key").eqNullSafe(F.col(f"{b}.group_key"))
-
-    pairs = pairs.persist()
-    # hybrid: a small adjacency set (the overwhelmingly common case —
-    # O(components touching tile borders), not O(cells)) resolves in a
-    # driver union-find in one job; a large one (striped rasters,
-    # adversarial tile alignments) takes the distributed loop, so no
-    # driver memory bound exists on any input.
-    n_pairs = pairs.limit(driver_cap + 1).count()
-    if n_pairs <= driver_cap:
-        labels = _driver_union_find_labels(spark, pairs)
-    else:
-        labels = _propagate_labels(pairs, _same, max_iters)
+    # components touching across tile borders: same boundary line,
+    # position and value, one side each (node id = tile_id * 2^22 +
+    # label, as in regions)
+    labels = components(_merge_pairs(stage1), ("measurement", "group_key"))
 
     polys = stage1.filter(F.col("kind") == "poly").withColumn(
         "node", F.col("tile_id") * int(_L) + F.col("label")
@@ -345,112 +293,6 @@ def vectorize_tiled(cube: GeoCube, measurement: str = None,
         .groupBy("measurement", "group_key", "component")
         .applyInPandas(_dissolve, schema=TILED_VECTOR_SCHEMA)
     )
-
-
-def _driver_union_find_labels(spark, pairs: DataFrame) -> DataFrame:
-    """Small-adjacency path: classic union-find over collected pairs,
-    returned as the same (measurement, group_key, node, label) frame
-    the distributed path produces."""
-    parent: dict = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    rows = pairs.collect()
-    for r in rows:
-        ka = (r["measurement"], r["group_key"], r["a"])
-        kb = (r["measurement"], r["group_key"], r["b"])
-        ra, rb = find(ka), find(kb)
-        if ra != rb:
-            parent[rb] = ra
-    # min node id per root = stable component label (matches the
-    # distributed loop's min-label convention)
-    root_min: dict = {}
-    for k in parent:
-        root = find(k)
-        cur = root_min.get(root)
-        if cur is None or k[2] < cur:
-            root_min[root] = k[2]
-    out = [
-        (k[0], k[1], int(k[2]), int(root_min[find(k)])) for k in parent
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("measurement", T.StringType()),
-            T.StructField("group_key", T.StringType()),
-            T.StructField("node", T.LongType()),
-            T.StructField("label", T.LongType()),
-        ]
-    )
-    return spark.createDataFrame(out, schema=schema)
-
-
-def _propagate_labels(pairs: DataFrame, _same, max_iters: int) -> DataFrame:
-    """Distributed connected components: min-label propagation with
-    pointer jumping over the edge set. O(log diameter) label-stable
-    rounds, each a couple of edge-set shuffles — never touches cells,
-    never collects to the driver."""
-    adj = pairs.union(
-        pairs.select("measurement", "group_key",
-                     F.col("b").alias("a"), F.col("a").alias("b"))
-    ).persist()
-    # each round references the previous labels several times (the
-    # propagation join, the jump self-join, the convergence diff), so
-    # lineage would grow ~4x per round; localCheckpoint() truncates
-    # the plan and caches the round's result
-    labels = (
-        adj.select("measurement", "group_key", F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .transform(_flat)
-    )
-    for _ in range(max_iters):
-        prop = (
-            adj.alias("e")
-            .join(labels.alias("l"),
-                  _same("e", "l") & (F.col("e.a") == F.col("l.node")))
-            .select(
-                F.col("e.measurement").alias("measurement"),
-                F.col("e.group_key").alias("group_key"),
-                F.col("e.b").alias("node"), F.col("l.label").alias("label"),
-            )
-        )
-        merged = (
-            labels.unionByName(prop)
-            .groupBy("measurement", "group_key", "node")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jumping: label <- label(label)
-        jumped = (
-            merged.alias("m")
-            .join(
-                merged.alias("p"),
-                _same("m", "p") & (F.col("m.label") == F.col("p.node")),
-                "left",
-            )
-            .select(
-                F.col("m.measurement").alias("measurement"),
-                F.col("m.group_key").alias("group_key"),
-                F.col("m.node").alias("node"),
-                F.coalesce(F.col("p.label"), F.col("m.label"))
-                .alias("label"),
-            )
-            .transform(_flat)
-        )
-        changed = (
-            jumped.alias("j")
-            .join(labels.alias("o"),
-                  _same("j", "o") & (F.col("j.node") == F.col("o.node")))
-            .filter(F.col("j.label") != F.col("o.label"))
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            break
-    return labels
 
 
 def _merge_part_rings(parts) -> list:

@@ -13,6 +13,7 @@ from geocube_spark.functions import dedup as D
 from geocube_spark.functions import multimodal as M
 from geocube_spark.functions import similarity as S
 from geocube_spark.operators import pipeline_queries as P
+from geocube_spark.plans import components
 
 
 @pytest.fixture(scope="module")
@@ -86,7 +87,7 @@ def test_simhash_banding_full_recall(spark, sf_dir):
     assert got == brute
 
 
-def test_near_dup_clusters_chain_graph(spark):
+def test_near_dup_clusters_chain_graph(spark, monkeypatch):
     # path graph 1-2-3-...-9 plus singleton 100: one cluster labeled 1
     # (min id), keep = longest text (id 5), singleton keeps itself.
     # A 9-node chain forces several propagation rounds, exercising the
@@ -102,8 +103,9 @@ def test_near_dup_clusters_chain_graph(spark):
     # both execution paths: driver union-find (default cap) and the
     # distributed propagation loop (cap forced to 0) must agree
     for cap in (200_000, 0):
+        monkeypatch.setattr(components, "DRIVER_CAP", cap)
         out = (
-            D.near_dup_clusters(docs, pairs=pairs, driver_cap=cap)
+            D.near_dup_clusters(docs, pairs=pairs)
             .orderBy("id")
             .toPandas()
             .set_index("id")
@@ -114,6 +116,29 @@ def test_near_dup_clusters_chain_graph(spark):
         assert out.loc[100, "cluster_id"] == 100
         assert out.loc[100, "cluster_size"] == 1
         assert out.loc[100, "keep"]
+
+
+def test_near_dup_clusters_shuffled_chain_converges(spark, monkeypatch):
+    """A 41-document near-dup chain whose ids are shuffled needs about
+    24 propagation rounds: the distributed path returns one cluster of
+    41, and a round budget too small for it raises instead of
+    returning split clusters."""
+    import random
+
+    ids = list(range(1, 42))
+    random.Random(0).shuffle(ids)
+    docs = spark.createDataFrame([(i, "x" * i) for i in ids],
+                                 "doc_id long, text string")
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])),
+                                  "id_a long, id_b long")
+    monkeypatch.setattr(components, "DRIVER_CAP", 0)
+    out = D.near_dup_clusters(docs, pairs=pairs).toPandas()
+    assert set(out["cluster_id"]) == {1}
+    assert (out["cluster_size"] == 41).all()
+    assert out.loc[out["keep"], "id"].tolist() == [41]
+    monkeypatch.setattr(components, "MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="converge"):
+        D.near_dup_clusters(docs, pairs=pairs).collect()
 
 
 def test_near_dup_clusters_corpus_invariants(spark, sf_dir):

@@ -63,13 +63,20 @@ def test_region_group_matches_single_array(spark, class_cube):
     np.testing.assert_array_equal(got[mask], exp[mask])
 
 
-def test_region_group_single_component_across_tiles(spark):
+@pytest.mark.parametrize("cap", [None, 0], ids=["driver", "distributed"])
+def test_region_group_single_component_across_tiles(spark, monkeypatch,
+                                                    cap):
     """A uniform raster is ONE component labeled by cell 0 even though
-    it spans every tile."""
+    it spans every tile, on both component engines (a cap of 0 forces
+    the distributed propagation)."""
     from geocube_spark.cube import CHUNK_SCHEMA, GeoCube, BandMeta
     from geocube_spark.geometry.affine import Affine
     from geocube_spark.geometry.crs import CRS
     from geocube_spark.grid.geobox import GeoBox
+    from geocube_spark.plans import components
+
+    if cap is not None:
+        monkeypatch.setattr(components, "DRIVER_CAP", cap)
 
     ts, H, W = 8, 16, 24
     gb = GeoBox(W, H, Affine(1.0, 0.0, 0.0, 0.0, -1.0, 0.0), CRS(4326))

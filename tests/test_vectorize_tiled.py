@@ -98,11 +98,15 @@ def _canon_geom(row):
     return (round(row["value"], 9), tuple(rings))
 
 
-def test_vectorize_tiled_distributed_labels(spark, cube):
-    """driver_cap=0 forces the distributed min-label-propagation path;
-    output must be identical to the driver union-find path."""
+def test_vectorize_tiled_distributed_labels(spark, cube, monkeypatch):
+    """A component-engine cap of 0 forces the distributed
+    min-label-propagation path; output must be identical to the
+    driver union-find path."""
+    from geocube_spark.plans import components
+
     fast = vectorize_tiled(cube, "om_r").collect()
-    dist = vectorize_tiled(cube, "om_r", driver_cap=0).collect()
+    monkeypatch.setattr(components, "DRIVER_CAP", 0)
+    dist = vectorize_tiled(cube, "om_r").collect()
     assert sorted(map(_canon_geom, fast), key=repr) == \
            sorted(map(_canon_geom, dist), key=repr)
 
