@@ -1389,25 +1389,36 @@ def _forced_engine(engine: str):
          _TILED_NA_MIN_CELLS) = saved
 
 
-def _point_bucket(tile_size):
-    """Bucket edge (cells) of the tiled point interpolators: finer than
-    tiles, so a round-1 halo is a thin ring and the per-tile point count
-    stays ~points-in-tile + O(ring)."""
-    return max(8, tile_size // 4)
+# the tiled point interpolators' bucket edge is this many mean point
+# spacings of the densest band (rounded up to a power of two): round 1
+# gathers one bucket of ring, about what a cell's Delaunay triangle and
+# its circumcircle need on a uniform band
+_RING_SPACINGS = 16
 
 
-def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
-                            tile_size):
+def _point_bucket(tile_size, n_max, height, width):
+    """Bucket edge (cells) of the tiled point interpolators, one per
+    call: :data:`_RING_SPACINGS` mean spacings of the densest band
+    (``n_max`` points on ``height x width`` cells), rounded up to a
+    power of two, clamped to ``8 .. max(8, tile_size // 4)``. Finer
+    than tiles, so a round-1 halo is a thin ring and the per-tile point
+    count stays ~points-in-tile + O(ring)."""
+    cap = max(8, tile_size // 4)
+    if n_max <= 0:
+        return cap
+    spacing = math.sqrt(height * width / n_max)
+    edge = 2 ** math.ceil(math.log2(_RING_SPACINGS * spacing))
+    return int(min(max(edge, 8), cap))
+
+
+def _decode_points(long_df, gb_dict, src_spec, grouped):
     """Shared front half of the tiled interpolators: decode + project
-    the scatter points ONCE (distributed) and bucket them on the
-    :func:`_point_bucket` grid. Returns the flattened points frame."""
+    the scatter points ONCE (distributed), with each point's grid cell
+    ``row``/``col``. Returns the flattened points frame."""
     from .plans.flatten import _flat
 
     gb0 = GeoBox.from_dict(gb_dict)
     A = gb0.affine
-    bc = _point_bucket(tile_size)
-    nbr = (gb0.height + bc - 1) // bc
-    nbc = (gb0.width + bc - 1) // bc
 
     gsel = (F.col("group_key").cast("string") if grouped
             else F.lit(None).cast("string"))
@@ -1418,7 +1429,7 @@ def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
         F.col("value").cast("double").alias("v"),
     )
     pt_schema = ("measurement string, __g string, seq long, x double, "
-                 "y double, v double, bi int, bj int")
+                 "y double, v double, row long, col long")
 
     def _decode(batches):
         gb = GeoBox.from_dict(gb_dict)
@@ -1437,24 +1448,36 @@ def _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
             px, py = vx, vy
             if reproject and len(px):
                 px, py = crs_transform(src, gb.crs, px, py)
-            col = np.floor((px - A.c) / A.a).astype(np.int64)
-            row = np.floor((py - A.f) / A.e).astype(np.int64)
             yield pd.DataFrame({
                 "measurement": pdf["measurement"].values,
                 "__g": pdf["__g"].values,
                 "seq": pdf["seq"].values.astype(np.int64),
                 "x": px, "y": py,
                 "v": pdf["v"].values.astype(np.float64),
-                "bi": np.clip(row // bc, 0, nbr - 1).astype(np.int32),
-                "bj": np.clip(col // bc, 0, nbc - 1).astype(np.int32),
+                "row": np.floor((py - A.f) / A.e).astype(np.int64),
+                "col": np.floor((px - A.c) / A.a).astype(np.int64),
             })
 
     return src_rows.mapInPandas(_decode, schema=pt_schema).transform(_flat)
 
 
+def _bucketed(pts, bc, height, width):
+    """``pts`` with each point's ``bi``/``bj`` on the ``bc``-cell
+    bucket grid (lazy columns, clipped to the grid) in place of its
+    cell ``row``/``col``."""
+    def _bucket(c, n_cells):
+        n_b = -(-n_cells // bc)
+        b = F.floor(F.col(c) / F.lit(bc))
+        return F.least(F.greatest(b, F.lit(0)), F.lit(n_b - 1)).cast("int")
+
+    return (pts.withColumn("bi", _bucket("row", height))
+            .withColumn("bj", _bucket("col", width))
+            .drop("row", "col"))
+
+
 def _band_stats(pts, hulls=False):
     """``{(measurement, __g): (n, min_seq, max_seq, hull)}`` of the
-    bucketed points, in one job: per-partition partials merged on the
+    decoded points, in one job: per-partition partials merged on the
     driver. ``hull`` (the band's convex hull, as a hull of the
     partition hulls) is computed only with ``hulls=True``."""
     from .kernels.tiled_linear import convex_hull
@@ -1515,24 +1538,41 @@ def _tiles_frame(spark, gb_dict, tile_size, bc, bands_df):
 
 
 def _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom, grouped,
-                  label, make_eval, *, hulls=False, schedule=None):
-    """The plan of the three tiled point interpolators: bucket the
-    points, collect the band stats, then resolve every (band, tile)
-    through the halo engine with the callback ``make_eval(stats)``."""
+                  label, make_eval, *, hulls=False, radius=None):
+    """The plan of the three tiled point interpolators: decode the
+    points, collect the band stats, size the bucket edge from the
+    densest band (:func:`_point_bucket`), then resolve every (band,
+    tile) through the halo engine with the callback
+    ``make_eval(stats)``.
+
+    The halo doubles from one bucket until the ring reaches the reach
+    of the fixed ``tile_size // 4`` edge (8 of its buckets), then
+    gathers the whole band, so a clustered band never reaches the full
+    gather sooner than with that edge. With ``radius`` (world units)
+    the one round is that radius, rounded up to whole buckets per
+    axis."""
     spark = long_df.sparkSession
-    pts = _decode_bucketed_points(long_df, gb_dict, src_spec, grouped,
-                                  tile_size)
+    gb0 = GeoBox.from_dict(gb_dict)
+    pts = _decode_points(long_df, gb_dict, src_spec, grouped)
     stats = _band_stats(pts, hulls)
     if not stats:
         # no points at all: the global path emits nothing either
         return spark.createDataFrame([], CHUNK_SCHEMA)
     bands_df = spark.createDataFrame(sorted(stats),
                                      "measurement string, __g string")
-    bc = _point_bucket(tile_size)
+    n_max = max(n for n, *_ in stats.values())
+    bc = _point_bucket(tile_size, n_max, gb0.height, gb0.width)
+    schedule = None
+    if radius is not None:
+        A = gb0.affine
+        schedule = [(max(1, math.ceil(radius / (bc * abs(A.e)))),
+                     max(1, math.ceil(radius / (bc * abs(A.a)))))]
     tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
     meta = {k: (zoom, n, mn, mx) for k, (n, mn, mx, _) in stats.items()}
-    return halo_resolve(tiles, pts, gb_dict, bc, meta, make_eval(stats),
-                        schedule=schedule, label=label)
+    return halo_resolve(tiles, _bucketed(pts, bc, gb0.height, gb0.width),
+                        gb_dict, bc, meta, make_eval(stats),
+                        schedule=schedule,
+                        reach=8 * max(8, tile_size // 4), label=label)
 
 
 def _margin_pad(gb):
@@ -1546,11 +1586,12 @@ def _interp_idw_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
     """Distributed radius-bounded IDW — exact by construction, ONE
     round, no certificate: every cell's donors live within ``radius``
     of the cell, so a tile halo of ``radius`` (rounded up to whole
-    buckets per axis) gathers every donor of every cell in the tile.
-    Each tile runs the same ``idw_interp`` kernel on its complete,
-    seq-sorted donor set, so the weighted sums accumulate in the global
-    order up to the zeroed out-of-radius terms: values match the
-    broadcast path to float round-off, the fill pattern exactly.
+    buckets of the call's edge, per axis) gathers every donor of every
+    cell in the tile. Each tile runs the same ``idw_interp`` kernel on
+    its complete, seq-sorted donor set, so the weighted sums accumulate
+    in the global order up to the zeroed out-of-radius terms: values
+    match the broadcast path to float round-off, the fill pattern
+    exactly.
 
     The broadcast path ships ALL points to every tile and pays
     O(cells x points); this path pays O(cells x local donors) — the
@@ -1558,10 +1599,6 @@ def _interp_idw_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
     from .kernels.interpolate import _parse_idw, idw_interp
 
     p = _parse_idw(method)
-    A = GeoBox.from_dict(gb_dict).affine
-    bc = _point_bucket(tile_size)
-    halo = (max(1, math.ceil(p["radius"] / (bc * abs(A.e)))),
-            max(1, math.ceil(p["radius"] / (bc * abs(A.a)))))
 
     def _make(stats):
         def _idw(t, donors, gx, gy, rect):
@@ -1577,7 +1614,8 @@ def _interp_idw_tiled(long_df, gb_dict, src_spec, tile_size, zoom,
         return _idw
 
     return _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom,
-                         grouped, "tiled-idw", _make, schedule=[halo])
+                         grouped, "tiled-idw", _make,
+                         radius=p["radius"])
 
 
 def _interp_nearest_tiled(long_df, gb_dict, src_spec, tile_size, zoom,

@@ -12,10 +12,14 @@ donor is copied to each tile whose halo covers its bucket. One round:
       -> materialize that output once; its uncertified rows (counted)
          name the next round's tiles
 
-Uncertified tiles double the halo, and the last round of the default
-schedule gathers the whole band, so a certificate that holds on the
-whole band always terminates. A tile still uncertified after the last
-round raises: it never silently goes missing from the cube.
+The ring is counted in buckets of the caller's edge ``cell``, chosen
+per call (the tiled point interpolators size it by point density,
+``interpolate_na`` uses its tile size), so a ring of ``r`` buckets is
+``r * cell`` cells wide. Uncertified tiles double the halo, and the
+last round of the default schedule gathers the whole band, so a
+certificate that holds on the whole band always terminates. A tile
+still uncertified after the last round raises: it never silently goes
+missing from the cube.
 
 The caller supplies ``evaluate(tile, donors, gx, gy, rect)``:
 
@@ -93,6 +97,19 @@ def margin_certified(qx, qy, d, rect, pad):
     return bool((d < margin - pad).all())
 
 
+def _cells(r, cell):
+    return (r[0] * cell, r[1] * cell) if isinstance(r, tuple) else r * cell
+
+
+def ring_schedule(cell, reach):
+    """The finite halo radii, in buckets of ``cell`` cells: doubling
+    from 1 until the ring spans at least ``reach`` cells."""
+    radii = [1]
+    while radii[-1] * cell < reach:
+        radii.append(2 * radii[-1])
+    return radii
+
+
 def _bucket_span(lo, hi, r, n):
     return F.explode(F.sequence(
         F.greatest(F.lit(0), F.col(lo) - F.lit(int(r))),
@@ -101,7 +118,7 @@ def _bucket_span(lo, hi, r, n):
 
 
 def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
-                 schedule=None, label="halo"):
+                 schedule=None, reach=None, label="halo"):
     """Resolve every tile of ``tiles`` through halo rounds and return
     the certified chunk rows (``CHUNK_SCHEMA``).
 
@@ -111,9 +128,11 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     columns. ``meta[(measurement, __g)]`` is the band's ``(zoom,
     n_geoms, min_seq, max_seq)`` for the chunk rows. ``schedule``
     lists one halo radius per round, in buckets, as ``r`` or ``(r_i,
-    r_j)``; the default doubles from 1 and gathers the whole band in
-    round :data:`HALO_ROUNDS`. ``tiles`` stays lazy: the next round's
-    tiles are a semi-join of it with this round's uncertified rows."""
+    r_j)``; the default is :func:`ring_schedule` up to ``reach`` cells
+    (by default ``2 ** (HALO_ROUNDS - 2)`` buckets, so the whole band
+    is gathered in round :data:`HALO_ROUNDS`), then the whole band.
+    ``tiles`` stays lazy: the next round's tiles are a semi-join of it
+    with this round's uncertified rows."""
     from ..cube import CHUNK_SCHEMA, _chunk_row
     from ..grid.geobox import GeoBox
     from .flatten import _flat
@@ -124,8 +143,9 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     n_i = -(-gb.height // cell)
     n_j = -(-gb.width // cell)
     if schedule is None:
-        schedule = [2 ** k for k in range(HALO_ROUNDS - 1)]
-        schedule.append(max(n_i, n_j))
+        if reach is None:
+            reach = 2 ** (HALO_ROUNDS - 2) * cell
+        schedule = ring_schedule(cell, reach) + [max(n_i, n_j)]
     donor_cols = [c for c in donors.columns if c not in _JOIN_KEYS]
     eval_schema = T.StructType(
         list(CHUNK_SCHEMA.fields)
@@ -167,8 +187,9 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
         resolved.append(out.filter(F.col("ok")).select(*CHUNK_SCHEMA.names))
         left = out.filter(~F.col("ok")).select(*_TILE_ID)
         n_left = left.count()
-        logger.debug("%s round %d (halo r=%s buckets): %d tiles "
-                     "unresolved", label, round_i + 1, r, n_left)
+        logger.debug("%s round %d (halo r=%s buckets of %d cells, "
+                     "%s cells): %d tiles unresolved", label, round_i + 1,
+                     r, cell, _cells(r, cell), n_left)
         if n_left == 0:
             return functools.reduce(DataFrame.unionByName, resolved)
         # at most one row per tile: broadcast, so the plan stays static
@@ -180,6 +201,7 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     )
     raise GeoCubeError(
         f"{label}: {n_left} tile(s) still uncertified after the last "
-        f"halo round (radius {r} buckets) in band(s) (measurement, "
+        f"halo round (radius {r} buckets of {cell} cells, "
+        f"{_cells(r, cell)} cells) in band(s) (measurement, "
         f"group) {bands}"
     )

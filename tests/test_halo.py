@@ -11,12 +11,13 @@ import pandas as pd
 from pyspark.sql import functions as F
 import pytest
 
-from geocube_spark.cube import _forced_engine, _tiles_frame, make_geocube
+from geocube_spark.cube import (_forced_engine, _point_bucket,
+                                _tiles_frame, make_geocube)
 from geocube_spark.exceptions import GeoCubeError
 from geocube_spark.geometry import wkb as W
 from geocube_spark.grid.geobox import GeoBox
 from geocube_spark.plans.halo import (HALO_ROUNDS, gathered_rect,
-                                      halo_resolve)
+                                      halo_resolve, ring_schedule)
 
 
 class _Aff:
@@ -48,6 +49,23 @@ def test_gathered_rect_edges_both_signs(a, e):
                                                       inf)
 
 
+def test_point_bucket_sized_by_density():
+    """The tiled point interpolators' bucket edge: 16 mean spacings of
+    the densest band, rounded up to a power of two, clamped to
+    8 .. tile_size // 4; the doubling schedule of any edge reaches the
+    fixed 64-cell edge's 512-cell ring before the full gather."""
+    assert _point_bucket(256, 160_000, 768, 768) == 32
+    assert _point_bucket(256, 16_000, 768, 768) == 64  # tile_size // 4
+    assert _point_bucket(256, 10_000_000, 768, 768) == 8  # the floor
+    assert _point_bucket(16, 160_000, 768, 768) == 8
+    assert ring_schedule(64, 512) == [1, 2, 4, 8]
+    assert ring_schedule(32, 512) == [1, 2, 4, 8, 16]
+    for edge in (32, 64):
+        radii = ring_schedule(edge, 512)
+        assert radii[-1] * edge == 512
+        assert all(r * edge < 512 for r in radii[:-1])
+
+
 def test_halo_raises_when_never_certified(spark):
     """A callback that never certifies must fail after the full-gather
     round, naming the band and the tile count — no tile may silently
@@ -67,7 +85,7 @@ def test_halo_raises_when_never_certified(spark):
         return np.zeros(t.h * t.w), False
 
     with pytest.raises(GeoCubeError,
-                       match=rf"{n_tiles} tile\(s\).*'value'"):
+                       match=rf"{n_tiles} tile\(s\).*4 cells.*'value'"):
         halo_resolve(tiles, donors, gb.to_dict(), 4,
                      {("value", "\x00"): (0, 2, 0, 1)}, never,
                      label="never")

@@ -10,12 +10,14 @@ grouped and ungrouped), kernel-level certificate behavior, and
 guaranteed termination via the full-gather final round.
 """
 
-from contextlib import nullcontext
+import logging
+from contextlib import contextmanager, nullcontext
 
 import numpy as np
 import pandas as pd
 import pytest
 
+from geocube_spark import cube as cube_mod
 from geocube_spark.cube import _forced_engine, make_geocube
 from geocube_spark.geometry import wkb as W
 from geocube_spark.kernels.delaunay import Triangulation
@@ -403,6 +405,55 @@ def test_tiled_nearest_clustered_growth(spark):
     assert set(g) == set(t)
     for k in g:
         assert np.array_equal(g[k][4], t[k][4]), k
+
+
+@contextmanager
+def _halo_rounds():
+    """The halo engine's per-round debug lines, as they are logged."""
+    log = logging.getLogger("geocube_spark.plans.halo")
+    seen = []
+    handler = logging.Handler(logging.DEBUG)
+    handler.emit = lambda record: seen.append(record.getMessage())
+    level = log.level
+    log.setLevel(logging.DEBUG)
+    log.addHandler(handler)
+    try:
+        yield seen
+    finally:
+        log.removeHandler(handler)
+        log.setLevel(level)
+
+
+@pytest.mark.parametrize("method", ["linear", "nearest", "proximity"])
+def test_tiled_density_ring_grows_on_clustered_band(spark, monkeypatch,
+                                                    method):
+    """A ring sized by the band's mean spacing is too thin where the
+    band is sparse: with the spacing factor patched down, a dense
+    cluster in the left tile sets an 8-cell ring, the sparse right
+    tile needs further halo rounds, and the values still equal the
+    global fit."""
+    monkeypatch.setattr(cube_mod, "_RING_SPACINGS", 1)
+    rng = np.random.default_rng(53)
+    lon = np.concatenate([rng.uniform(-93.8, -92.52, 200),
+                          -93.5 + rng.normal(0, 0.05, 400)])
+    lat = np.concatenate([rng.uniform(41.2, 41.84, 200),
+                          41.52 + rng.normal(0, 0.05, 400)])
+    docs = _vec(spark, lon, lat, np.hypot(lon + 93, lat - 41.5) * 10)
+    kw = dict(measurements=["value"], fill=float("nan"),
+              rasterize_function="points_griddata", interp_method=method,
+              resolution=(-0.01, 0.01), tile_size=64)
+    g = _chunks(_geocube("global", docs, **kw))
+    with _halo_rounds() as rounds:
+        t = _chunks(_geocube("tiled", docs, **kw))
+    assert len(rounds) >= 2, rounds
+    assert "(halo r=1 buckets of 8 cells, 8 cells)" in rounds[0], rounds
+    if method == "linear":
+        _assert_parity(g, t)
+        return
+    assert set(g) == set(t)
+    for k in g:
+        assert np.array_equal(g[k][4], t[k][4]), k  # bit-identical
+        assert g[k][:4] == t[k][:4] and g[k][5:] == t[k][5:], k
 
 
 def test_tiled_interpolate_na_matches_global(spark):
