@@ -55,7 +55,8 @@ from .kernels.rasterize import (
     geometry_cells,
 )
 from .plans.checkpoint import DEFAULT_N_BUCKETS, write_cube
-from .plans.halo import NO_GROUP, halo_resolve, margin_certified
+from .plans.halo import (HALO_ROUNDS, NO_GROUP, halo_resolve,
+                          margin_certified)
 
 logger = logging.getLogger("geocube_spark")
 
@@ -1389,26 +1390,55 @@ def _forced_engine(engine: str):
          _TILED_NA_MIN_CELLS) = saved
 
 
-# the tiled point interpolators' bucket edge is this many mean point
-# spacings of the densest band (rounded up to a power of two): round 1
-# gathers one bucket of ring, about what a cell's Delaunay triangle and
-# its circumcircle need on a uniform band
+# the tiled point interpolators start a tile's halo at this many mean
+# point spacings (rounded up to a power of two): about what a cell's
+# Delaunay triangle and its circumcircle need where the point density
+# is near-uniform
 _RING_SPACINGS = 16
 
 
-def _point_bucket(tile_size, n_max, height, width):
-    """Bucket edge (cells) of the tiled point interpolators, one per
-    call: :data:`_RING_SPACINGS` mean spacings of the densest band
-    (``n_max`` points on ``height x width`` cells), rounded up to a
-    power of two, clamped to ``8 .. max(8, tile_size // 4)``. Finer
-    than tiles, so a round-1 halo is a thin ring and the per-tile point
-    count stays ~points-in-tile + O(ring)."""
+def _point_bucket(tile_size, n, cells):
+    """Ring (cells) for ``n`` points on ``cells`` cells:
+    :data:`_RING_SPACINGS` mean spacings, rounded up to a power of two,
+    clamped to ``8 .. max(8, tile_size // 4)``. The upper clamp is the
+    fixed ring of sparse tiles; a denser tile starts thinner, so its
+    round-1 point count stays ~points-in-tile + O(ring)."""
     cap = max(8, tile_size // 4)
-    if n_max <= 0:
+    if n <= 0:
         return cap
-    spacing = math.sqrt(height * width / n_max)
-    edge = 2 ** math.ceil(math.log2(_RING_SPACINGS * spacing))
+    edge = 2 ** math.ceil(math.log2(_RING_SPACINGS * math.sqrt(cells / n)))
     return int(min(max(edge, 8), cap))
+
+
+def _density_block(tile_size):
+    """Edge (cells) of the blocks the band stats count points in: twice
+    the largest ring, so a tile's window is a few blocks."""
+    return 2 * max(8, tile_size // 4)
+
+
+def _tile_rings(block_n, gb, tile_size):
+    """``{(measurement, __g, tile_id): ring}``: each tile's round-1 ring
+    is the :func:`_point_bucket` of the sparsest block within one block
+    of the tile (``block_n[(measurement, __g)]`` holds each band's
+    point count per :func:`_density_block` block), so a tile in or next
+    to a sparse patch keeps the fixed ring. Only the tiles whose ring
+    is below the clamp are listed."""
+    cap = max(8, tile_size // 4)
+    block = _density_block(tile_size)
+    n_tiles, ntx, _ = gb.n_tiles(tile_size)
+    rings = {}
+    for (m, g), counts in block_n.items():
+        for t in range(n_tiles):
+            r0, c0 = divmod(t, ntx)
+            r0, c0 = r0 * tile_size, c0 * tile_size
+            r1 = min(r0 + tile_size, gb.height) - 1
+            c1 = min(c0 + tile_size, gb.width) - 1
+            window = counts[max(0, r0 // block - 1): r1 // block + 2,
+                            max(0, c0 // block - 1): c1 // block + 2]
+            edge = _point_bucket(tile_size, window.min(), block * block)
+            if edge < cap:
+                rings[(m, g, t)] = edge
+    return rings
 
 
 def _decode_points(long_df, gb_dict, src_spec, grouped):
@@ -1475,15 +1505,18 @@ def _bucketed(pts, bc, height, width):
             .drop("row", "col"))
 
 
-def _band_stats(pts, hulls=False):
+def _band_stats(pts, gb, block, hulls=False):
     """``{(measurement, __g): (n, min_seq, max_seq, hull)}`` of the
-    decoded points, in one job: per-partition partials merged on the
-    driver. ``hull`` (the band's convex hull, as a hull of the
-    partition hulls) is computed only with ``hulls=True``."""
+    decoded points, and each band's point counts per ``block``-cell
+    block of ``gb`` (a 2-D array), in one job: per-partition partials
+    merged on the driver. ``hull`` (the band's convex hull, as a hull
+    of the partition hulls) is computed only with ``hulls=True``."""
     from .kernels.tiled_linear import convex_hull
 
+    nbi, nbj = -(-gb.height // block), -(-gb.width // block)
     schema = ("measurement string, __g string, n long, mn long, "
-              "mx long, hx array<double>, hy array<double>")
+              "mx long, hx array<double>, hy array<double>, "
+              "bid array<long>, bn array<long>")
 
     def _part(batches):
         for pdf in batches:
@@ -1494,25 +1527,34 @@ def _band_stats(pts, hulls=False):
                                            sort=False):
                 h = (convex_hull(sub["x"].values, sub["y"].values)
                      if hulls else np.empty((0, 2)))
+                bi = np.clip(sub["row"].values // block, 0, nbi - 1)
+                bj = np.clip(sub["col"].values // block, 0, nbj - 1)
+                bid, bn = np.unique(bi * nbj + bj, return_counts=True)
                 out.append({
                     "measurement": m, "__g": g, "n": len(sub),
                     "mn": int(sub["seq"].min()),
                     "mx": int(sub["seq"].max()),
-                    "hx": h[:, 0], "hy": h[:, 1],
+                    "hx": h[:, 0], "hy": h[:, 1], "bid": bid, "bn": bn,
                 })
             yield pd.DataFrame(out)
 
     parts: dict = {}
     for r in pts.mapInPandas(_part, schema=schema).collect():
         parts.setdefault((r["measurement"], r["__g"]), []).append(r)
-    return {
-        k: (sum(r["n"] for r in rs), min(r["mn"] for r in rs),
+    stats, block_n = {}, {}
+    for k, rs in parts.items():
+        stats[k] = (
+            sum(r["n"] for r in rs), min(r["mn"] for r in rs),
             max(r["mx"] for r in rs),
             convex_hull(np.concatenate([r["hx"] for r in rs]),
                         np.concatenate([r["hy"] for r in rs]))
             if hulls else None)
-        for k, rs in parts.items()
-    }
+        counts = np.zeros(nbi * nbj, dtype=np.int64)
+        for r in rs:
+            np.add.at(counts, np.asarray(r["bid"], dtype=np.int64),
+                      np.asarray(r["bn"], dtype=np.int64))
+        block_n[k] = counts.reshape(nbi, nbj)
+    return stats, block_n
 
 
 def _tiles_frame(spark, gb_dict, tile_size, bc, bands_df):
@@ -1540,39 +1582,52 @@ def _tiles_frame(spark, gb_dict, tile_size, bc, bands_df):
 def _tiled_points(long_df, gb_dict, src_spec, tile_size, zoom, grouped,
                   label, make_eval, *, hulls=False, radius=None):
     """The plan of the three tiled point interpolators: decode the
-    points, collect the band stats, size the bucket edge from the
-    densest band (:func:`_point_bucket`), then resolve every (band,
-    tile) through the halo engine with the callback
-    ``make_eval(stats)``.
+    points, collect the band stats and block counts, size each tile's
+    round-1 ring by the point density in and around it
+    (:func:`_tile_rings`), then resolve every (band, tile) through the
+    halo engine with the callback ``make_eval(stats)``.
 
-    The halo doubles from one bucket until the ring reaches the reach
-    of the fixed ``tile_size // 4`` edge (8 of its buckets), then
-    gathers the whole band, so a clustered band never reaches the full
-    gather sooner than with that edge. With ``radius`` (world units)
-    the one round is that radius, rounded up to whole buckets per
-    axis."""
+    The bucket edge is the thinnest ring, so every ring is a whole
+    number of buckets. After round 1 every tile takes the rings of the
+    fixed ``max(8, tile_size // 4)`` edge: 2, 4 and 8 of its buckets,
+    then the whole band. So no tile takes more rounds than with that
+    edge, except one that edge certifies in round 1 and a thinner ring
+    does not. With ``radius`` (world units) the one round is that
+    radius, rounded up to whole buckets per axis."""
     spark = long_df.sparkSession
     gb0 = GeoBox.from_dict(gb_dict)
     pts = _decode_points(long_df, gb_dict, src_spec, grouped)
-    stats = _band_stats(pts, hulls)
+    stats, block_n = _band_stats(pts, gb0, _density_block(tile_size),
+                                 hulls)
     if not stats:
         # no points at all: the global path emits nothing either
         return spark.createDataFrame([], CHUNK_SCHEMA)
-    bands_df = spark.createDataFrame(sorted(stats),
-                                     "measurement string, __g string")
-    n_max = max(n for n, *_ in stats.values())
-    bc = _point_bucket(tile_size, n_max, gb0.height, gb0.width)
-    schedule = None
+    cap = max(8, tile_size // 4)
+    rings = _tile_rings(block_n, gb0, tile_size)
+    bc = min(rings.values(), default=cap)
+    # each band row carries its listed tiles' round-1 rings, in buckets
+    band_rings = {k: {} for k in stats}
+    for (m, g, t), edge in rings.items():
+        band_rings[(m, g)][t] = edge // bc
+    bands_df = spark.createDataFrame(
+        [k + (band_rings[k],) for k in sorted(stats)],
+        "measurement string, __g string, rings map<bigint, int>")
+    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
     if radius is not None:
         A = gb0.affine
         schedule = [(max(1, math.ceil(radius / (bc * abs(A.e)))),
                      max(1, math.ceil(radius / (bc * abs(A.a)))))]
-    tiles = _tiles_frame(spark, gb_dict, tile_size, bc, bands_df)
+    else:
+        tiles = tiles.withColumn("r1", F.coalesce(
+            F.try_element_at("rings", "tile_id"), F.lit(cap // bc)))
+        full = -(-max(gb0.height, gb0.width) // bc)
+        schedule = (["r1"]
+                    + [cap * 2 ** k // bc for k in range(1, HALO_ROUNDS - 1)]
+                    + [full])
     meta = {k: (zoom, n, mn, mx) for k, (n, mn, mx, _) in stats.items()}
     return halo_resolve(tiles, _bucketed(pts, bc, gb0.height, gb0.width),
                         gb_dict, bc, meta, make_eval(stats),
-                        schedule=schedule,
-                        reach=8 * max(8, tile_size // 4), label=label)
+                        schedule=schedule, label=label)
 
 
 def _margin_pad(gb):

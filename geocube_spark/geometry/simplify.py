@@ -107,10 +107,8 @@ def convex_hull(px: np.ndarray, py: np.ndarray) -> np.ndarray:
     """Andrew's monotone chain -> (k, 2) CCW hull vertices, unclosed.
     Input order/duplicates don't matter. Collinear inputs give the
     2-point extreme segment; k may be 1 or 2 for degenerate inputs."""
-    pts = np.column_stack([px, py]).astype(np.float64)
-    pts = pts[_outside_octagon(pts)]
     # np.unique sorts the rows lexicographically (x, then y)
-    pts = np.unique(pts, axis=0)
+    pts = np.unique(np.column_stack([px, py]).astype(np.float64), axis=0)
     if len(pts) <= 2:
         return pts
 
@@ -127,33 +125,6 @@ def convex_hull(px: np.ndarray, py: np.ndarray) -> np.ndarray:
 
 def _cross(o, a, p):
     return (a[0] - o[0]) * (p[1] - o[1]) - (a[1] - o[1]) * (p[0] - o[0])
-
-
-def _outside_octagon(pts):
-    """Akl-Toussaint prefilter: a mask that drops the points strictly
-    inside the octagon of the x, x+y, y, y-x extremes (CCW), which are
-    never hull vertices, so the monotone chain only walks the rest.
-    The strict test keeps a float margin, so a point the chain could
-    keep through round-off is never dropped; inputs with a non-finite
-    row are left whole (infinite arithmetic can keep interior points)."""
-    keep = np.ones(len(pts), dtype=bool)
-    if len(pts) < 8 or not np.isfinite(pts).all():
-        return keep
-    x, y = pts[:, 0], pts[:, 1]
-    idx = [x.argmax(), (x + y).argmax(), y.argmax(), (y - x).argmax(),
-           x.argmin(), (x + y).argmin(), y.argmin(), (y - x).argmin()]
-    octo = pts[idx]
-    # consecutive repeats are zero-length edges: drop them
-    octo = octo[np.any(octo != np.roll(octo, 1, axis=0), axis=1)]
-    if len(octo) < 3:
-        return keep
-    span = float(np.abs(pts - octo[0]).max())
-    inside = np.ones(len(pts), dtype=bool)
-    for a, b in zip(octo, np.roll(octo, -1, axis=0)):
-        ex, ey = b - a
-        cross = ex * (y - a[1]) - ey * (x - a[0])
-        inside &= cross > 64 * np.finfo(float).eps * (abs(ex) + abs(ey)) * span
-    return ~inside
 
 
 def convex_hull_points(pts: np.ndarray) -> np.ndarray:

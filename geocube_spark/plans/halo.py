@@ -15,11 +15,12 @@ donor is copied to each tile whose halo covers its bucket. One round:
 The ring is counted in buckets of the caller's edge ``cell``, chosen
 per call (the tiled point interpolators size it by point density,
 ``interpolate_na`` uses its tile size), so a ring of ``r`` buckets is
-``r * cell`` cells wide. Uncertified tiles double the halo, and the
-last round of the default schedule gathers the whole band, so a
-certificate that holds on the whole band always terminates. A tile
-still uncertified after the last round raises: it never silently goes
-missing from the cube.
+``r * cell`` cells wide. A round's radius is one for all tiles, or a
+column of the tiles frame that gives each tile its own. Uncertified
+tiles take the next, wider round, and the last round of the default
+schedule gathers the whole band, so a certificate that holds on the
+whole band always terminates. A tile still uncertified after the last
+round raises: it never silently goes missing from the cube.
 
 The caller supplies ``evaluate(tile, donors, gx, gy, rect)``:
 
@@ -97,28 +98,24 @@ def margin_certified(qx, qy, d, rect, pad):
     return bool((d < margin - pad).all())
 
 
-def _cells(r, cell):
-    return (r[0] * cell, r[1] * cell) if isinstance(r, tuple) else r * cell
-
-
-def ring_schedule(cell, reach):
-    """The finite halo radii, in buckets of ``cell`` cells: doubling
-    from 1 until the ring spans at least ``reach`` cells."""
-    radii = [1]
-    while radii[-1] * cell < reach:
-        radii.append(2 * radii[-1])
-    return radii
+def _ring(r, cell):
+    """A round's halo radius as logged: in buckets and in cells."""
+    if isinstance(r, str):
+        return f"r={r} buckets of {cell} cells, per tile"
+    cells = (r[0] * cell, r[1] * cell) if isinstance(r, tuple) else r * cell
+    return f"r={r} buckets of {cell} cells, {cells} cells"
 
 
 def _bucket_span(lo, hi, r, n):
+    r = F.col(r) if isinstance(r, str) else F.lit(int(r))
     return F.explode(F.sequence(
-        F.greatest(F.lit(0), F.col(lo) - F.lit(int(r))),
-        F.least(F.lit(int(n) - 1), F.col(hi) + F.lit(int(r))),
+        F.greatest(F.lit(0), F.col(lo) - r),
+        F.least(F.lit(int(n) - 1), F.col(hi) + r),
     ).cast("array<int>"))
 
 
 def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
-                 schedule=None, reach=None, label="halo"):
+                 schedule=None, label="halo"):
     """Resolve every tile of ``tiles`` through halo rounds and return
     the certified chunk rows (``CHUNK_SCHEMA``).
 
@@ -127,12 +124,12 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     ``donors`` carries ``measurement, __g, bi, bj`` plus the donor
     columns. ``meta[(measurement, __g)]`` is the band's ``(zoom,
     n_geoms, min_seq, max_seq)`` for the chunk rows. ``schedule``
-    lists one halo radius per round, in buckets, as ``r`` or ``(r_i,
-    r_j)``; the default is :func:`ring_schedule` up to ``reach`` cells
-    (by default ``2 ** (HALO_ROUNDS - 2)`` buckets, so the whole band
-    is gathered in round :data:`HALO_ROUNDS`), then the whole band.
-    ``tiles`` stays lazy: the next round's tiles are a semi-join of it
-    with this round's uncertified rows."""
+    lists one halo radius per round, in buckets, as ``r``, ``(r_i,
+    r_j)``, or the name of an int column of ``tiles`` holding each
+    tile's own radius; the default doubles from 1 and gathers the whole
+    band in round :data:`HALO_ROUNDS`. ``tiles`` stays lazy: the next
+    round's tiles are a semi-join of it with this round's uncertified
+    rows."""
     from ..cube import CHUNK_SCHEMA, _chunk_row
     from ..grid.geobox import GeoBox
     from .flatten import _flat
@@ -143,9 +140,8 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     n_i = -(-gb.height // cell)
     n_j = -(-gb.width // cell)
     if schedule is None:
-        if reach is None:
-            reach = 2 ** (HALO_ROUNDS - 2) * cell
-        schedule = ring_schedule(cell, reach) + [max(n_i, n_j)]
+        schedule = [2 ** k for k in range(HALO_ROUNDS - 1)]
+        schedule.append(max(n_i, n_j))
     donor_cols = [c for c in donors.columns if c not in _JOIN_KEYS]
     eval_schema = T.StructType(
         list(CHUNK_SCHEMA.fields)
@@ -153,25 +149,26 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
            T.StructField("ok", T.BooleanType())]
     )
 
-    def _round(r_i, r_j):
-        def _eval(key, pdf):
-            t = Tile(*key)
-            rect = gathered_rect(A, cell, t.b0i - r_i, t.b1i + r_i,
-                                 t.b0j - r_j, t.b1j + r_j, n_i, n_j)
-            values, ok = evaluate(
-                t, pdf.dropna(how="all", subset=donor_cols),
-                coords["x"][t.col0: t.col0 + t.w],
-                coords["y"][t.row0: t.row0 + t.h], rect,
-            )
-            zoom, n_geoms, mn, mx = meta[(t.m, t.g)]
-            row = _chunk_row(t.m, None if t.g == NO_GROUP else t.g, zoom,
-                             t[2:7], values, n_geoms, mn, mx)
-            row.update(__g=t.g, ok=bool(ok))
-            return pd.DataFrame([row], columns=eval_schema.names)
+    def _eval(key, pdf):
+        t = Tile(*key)
+        # the left join keeps one row per gathered bucket, so the
+        # bucket columns span the tile's (clamped) halo
+        bi, bj = pdf["bi"].astype(np.int64), pdf["bj"].astype(np.int64)
+        rect = gathered_rect(A, cell, bi.min(), bi.max(), bj.min(),
+                             bj.max(), n_i, n_j)
+        values, ok = evaluate(
+            t, pdf.dropna(how="all", subset=donor_cols),
+            coords["x"][t.col0: t.col0 + t.w],
+            coords["y"][t.row0: t.row0 + t.h], rect,
+        )
+        zoom, n_geoms, mn, mx = meta[(t.m, t.g)]
+        row = _chunk_row(t.m, None if t.g == NO_GROUP else t.g, zoom,
+                         t[2:7], values, n_geoms, mn, mx)
+        row.update(__g=t.g, ok=bool(ok))
+        return pd.DataFrame([row], columns=eval_schema.names)
 
-        return _eval
-
-    unresolved = tiles = tiles.select(*TILE_KEYS)
+    radius_cols = [r for r in schedule if isinstance(r, str)]
+    unresolved = tiles = tiles.select(*TILE_KEYS, *radius_cols)
     resolved = []
     for round_i, r in enumerate(schedule):
         r_i, r_j = r if isinstance(r, tuple) else (r, r)
@@ -181,15 +178,14 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
             .withColumn("bj", _bucket_span("b0j", "b1j", r_j, n_j))
             .join(donors, _JOIN_KEYS, "left")
             .groupBy(*TILE_KEYS)
-            .applyInPandas(_round(r_i, r_j), schema=eval_schema)
+            .applyInPandas(_eval, schema=eval_schema)
             .transform(_flat)
         )
         resolved.append(out.filter(F.col("ok")).select(*CHUNK_SCHEMA.names))
         left = out.filter(~F.col("ok")).select(*_TILE_ID)
         n_left = left.count()
-        logger.debug("%s round %d (halo r=%s buckets of %d cells, "
-                     "%s cells): %d tiles unresolved", label, round_i + 1,
-                     r, cell, _cells(r, cell), n_left)
+        logger.debug("%s round %d (halo %s): %d tiles unresolved", label,
+                     round_i + 1, _ring(r, cell), n_left)
         if n_left == 0:
             return functools.reduce(DataFrame.unionByName, resolved)
         # at most one row per tile: broadcast, so the plan stays static
@@ -201,7 +197,6 @@ def halo_resolve(tiles, donors, gb_dict, cell, meta, evaluate, *,
     )
     raise GeoCubeError(
         f"{label}: {n_left} tile(s) still uncertified after the last "
-        f"halo round (radius {r} buckets of {cell} cells, "
-        f"{_cells(r, cell)} cells) in band(s) (measurement, "
+        f"halo round ({_ring(r, cell)}) in band(s) (measurement, "
         f"group) {bands}"
     )

@@ -12,12 +12,12 @@ from pyspark.sql import functions as F
 import pytest
 
 from geocube_spark.cube import (_forced_engine, _point_bucket,
-                                _tiles_frame, make_geocube)
+                                _tile_rings, _tiles_frame, make_geocube)
 from geocube_spark.exceptions import GeoCubeError
 from geocube_spark.geometry import wkb as W
 from geocube_spark.grid.geobox import GeoBox
 from geocube_spark.plans.halo import (HALO_ROUNDS, gathered_rect,
-                                      halo_resolve, ring_schedule)
+                                      halo_resolve)
 
 
 class _Aff:
@@ -49,21 +49,31 @@ def test_gathered_rect_edges_both_signs(a, e):
                                                       inf)
 
 
-def test_point_bucket_sized_by_density():
-    """The tiled point interpolators' bucket edge: 16 mean spacings of
-    the densest band, rounded up to a power of two, clamped to
-    8 .. tile_size // 4; the doubling schedule of any edge reaches the
-    fixed 64-cell edge's 512-cell ring before the full gather."""
-    assert _point_bucket(256, 160_000, 768, 768) == 32
-    assert _point_bucket(256, 16_000, 768, 768) == 64  # tile_size // 4
-    assert _point_bucket(256, 10_000_000, 768, 768) == 8  # the floor
-    assert _point_bucket(16, 160_000, 768, 768) == 8
-    assert ring_schedule(64, 512) == [1, 2, 4, 8]
-    assert ring_schedule(32, 512) == [1, 2, 4, 8, 16]
-    for edge in (32, 64):
-        radii = ring_schedule(edge, 512)
-        assert radii[-1] * edge == 512
-        assert all(r * edge < 512 for r in radii[:-1])
+def test_point_ring_sized_by_local_density():
+    """A tile's round-1 ring: 16 mean spacings of the sparsest 128^2
+    block in or next to the tile, rounded up to a power of two,
+    clamped to 8 .. tile_size // 4; only tiles below the clamp are
+    listed, so tiles in or beside a sparse patch keep the fixed ring."""
+    block = 128 * 128
+    # 160k uniform points on 768^2 cells: 4,444 per block
+    assert _point_bucket(256, 4_444, block) == 32
+    assert _point_bucket(256, 444, block) == 64  # tile_size // 4
+    assert _point_bucket(256, 0, block) == 64
+    assert _point_bucket(256, 300_000, block) == 8  # the floor
+    assert _point_bucket(16, 70, 16 * 16) == 8
+    gb = GeoBox.from_bounds((0.0, 0.0, 768.0, 768.0), (-1.0, 1.0),
+                            "EPSG:3857")
+    uniform = np.full((6, 6), 4_444)
+    assert _tile_rings({("v", "a"): uniform}, gb, 256) == {
+        ("v", "a", t): 32 for t in range(9)}
+    # one sparse block at the top-left corner: only tile 0 reaches it
+    patchy = uniform.copy()
+    patchy[0, 0] = 400
+    dense = np.full((6, 6), 20_000)
+    assert _tile_rings({("v", "a"): patchy, ("v", "b"): dense}, gb,
+                       256) == {
+        **{("v", "a", t): 32 for t in range(1, 9)},
+        **{("v", "b", t): 16 for t in range(9)}}
 
 
 def test_halo_raises_when_never_certified(spark):

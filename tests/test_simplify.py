@@ -163,57 +163,6 @@ def test_convex_hull_properties():
         assert inside.all()
 
 
-def _chain_hull(px, py):
-    """The plain monotone chain over every point (no prefilter)."""
-    from geocube_spark.geometry.simplify import _cross
-
-    pts = np.unique(np.column_stack([px, py]).astype(np.float64), axis=0)
-    if len(pts) <= 2:
-        return pts
-
-    def _half(seq):
-        out = []
-        for p in seq:
-            while len(out) >= 2 and _cross(out[-2], out[-1], p) <= 0:
-                out.pop()
-            out.append(p)
-        return out[:-1]
-
-    return np.asarray(_half(pts) + _half(pts[::-1]), dtype=np.float64)
-
-
-def test_convex_hull_prefilter_keeps_output():
-    """The octagon prefilter never changes the hull: identical output
-    to the plain chain on random, duplicated, collinear, lattice,
-    far-offset and 0-2 point inputs, and on inputs with NaN/inf."""
-    from geocube_spark.geometry.simplify import convex_hull
-
-    rng = np.random.default_rng(7)
-    for i in range(3000):
-        n = int(rng.integers(0, 40))
-        kind = i % 6
-        if kind == 0:
-            x, y = rng.normal(size=n), rng.normal(size=n)
-        elif kind == 1:  # lattice: duplicates and collinear edges
-            x, y = (rng.integers(0, 5, (2, n)).astype(float))
-        elif kind == 2:  # all collinear
-            t = rng.uniform(size=n)
-            x, y = 3 * t + 1, -2 * t + 5
-        elif kind == 3:  # a far-offset circle
-            a = rng.uniform(0, 2 * np.pi, n)
-            x, y = np.cos(a) * 1e6 + 1e9, np.sin(a) * 1e6
-        elif kind == 4:
-            x, y = rng.uniform(size=(2, n))
-            if n:
-                x[rng.integers(0, n)] = (np.nan, np.inf, -np.inf)[i % 3]
-        else:  # rounded: many exact ties
-            x, y = rng.uniform(-1, 1, (2, n)).round(1)
-        with np.errstate(invalid="ignore"):
-            got, want = convex_hull(x, y), _chain_hull(x, y)
-        assert got.shape == want.shape, i
-        assert np.array_equal(got, want, equal_nan=True), i
-
-
 def test_convex_hull_degenerate_and_wkb():
     from geocube_spark.geometry.simplify import (
         convex_hull_points, convex_hull_wkb,

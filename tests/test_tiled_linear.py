@@ -425,19 +425,29 @@ def _halo_rounds():
 
 
 @pytest.mark.parametrize("method", ["linear", "nearest", "proximity"])
-def test_tiled_density_ring_grows_on_clustered_band(spark, monkeypatch,
-                                                    method):
-    """A ring sized by the band's mean spacing is too thin where the
-    band is sparse: with the spacing factor patched down, a dense
-    cluster in the left tile sets an 8-cell ring, the sparse right
-    tile needs further halo rounds, and the values still equal the
+def test_tiled_density_ring_per_tile_on_clustered_band(spark, monkeypatch,
+                                                       method):
+    """Each tile's round-1 ring follows the point density in and around
+    it: with the spacing factor patched down, the tile inside the dense
+    patch starts at an 8-cell ring and the tiles beside or in the sparse
+    rest at the 16-cell clamp; the rings too thin for the sparse tiles
+    grow through further halo rounds, and the values still equal the
     global fit."""
     monkeypatch.setattr(cube_mod, "_RING_SPACINGS", 1)
+    seen = []
+
+    def _spy(*a):
+        seen.append(tile_rings(*a))
+        return seen[-1]
+
+    tile_rings = cube_mod._tile_rings
+    monkeypatch.setattr(cube_mod, "_tile_rings", _spy)
     rng = np.random.default_rng(53)
-    lon = np.concatenate([rng.uniform(-93.8, -92.52, 200),
-                          -93.5 + rng.normal(0, 0.05, 400)])
-    lat = np.concatenate([rng.uniform(41.2, 41.84, 200),
-                          41.52 + rng.normal(0, 0.05, 400)])
+    # 64 x 192 cells in three 64-cell tiles: dense over columns 0-95,
+    # then one point each at columns 110 and 170
+    lon = np.concatenate([rng.uniform(-93.8, -92.84, 600),
+                          [-92.695, -92.095]])
+    lat = np.concatenate([rng.uniform(41.2, 41.84, 600), [41.3, 41.7]])
     docs = _vec(spark, lon, lat, np.hypot(lon + 93, lat - 41.5) * 10)
     kw = dict(measurements=["value"], fill=float("nan"),
               rasterize_function="points_griddata", interp_method=method,
@@ -445,8 +455,12 @@ def test_tiled_density_ring_grows_on_clustered_band(spark, monkeypatch,
     g = _chunks(_geocube("global", docs, **kw))
     with _halo_rounds() as rounds:
         t = _chunks(_geocube("tiled", docs, **kw))
+    # the clamp is 16 cells: only the dense patch's tile is listed
+    assert seen == [{("value", "\x00", 0): 8}], seen
     assert len(rounds) >= 2, rounds
-    assert "(halo r=1 buckets of 8 cells, 8 cells)" in rounds[0], rounds
+    assert "(halo r=r1 buckets of 8 cells, per tile)" in rounds[0], rounds
+    # later rounds: 2x, 4x, 8x the clamp, then the whole band
+    assert "(halo r=4 buckets of 8 cells, 32 cells)" in rounds[1], rounds
     if method == "linear":
         _assert_parity(g, t)
         return
