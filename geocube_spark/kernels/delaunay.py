@@ -1,12 +1,13 @@
-"""Bowyer-Watson Delaunay triangulation, pure numpy.
+"""Delaunay triangulation, pure numpy.
 
-Used by the 'linear' point-interpolation path (reference
+Used by the 'linear' and 'cubic' point-interpolation paths (reference
 geocube/rasterize.py:136-191 delegates to scipy.interpolate.griddata,
-whose 'linear' method is Delaunay + barycentric interpolation). scipy
-is not a dependency of this engine, so we triangulate ourselves. Point
-counts on this path are small (the interpolation inputs are the vector
-rows, not the raster), so an O(n^2)-ish incremental build is fine; the
-per-cell interpolation afterwards is fully vectorized.
+whose 'linear' method is Delaunay + barycentric interpolation) and by
+interpolate_na. scipy is not a dependency of this engine, so we
+triangulate ourselves: one build for every n, batch-parallel
+incremental insertion with Lawson flips, each round a handful of
+whole-array operations (see ``delaunay``). The per-cell interpolation
+afterwards is fully vectorized too.
 """
 
 from __future__ import annotations
@@ -50,42 +51,47 @@ def _batch_circum(allp: np.ndarray, tri: np.ndarray):
     return ux, uy, r2
 
 
-_BFS_THRESHOLD = 4096    # above this, the O(n^2) scan loses to the walk
-
-
-# documented single-task ceiling: the adjacency-walk build is expected
-# O(n) (~7 s per 100k points) but runs as ONE task per (band, group);
-# past this cap the fail-fast error beats a silently-pinned executor.
-# Only CUBIC still needs the single global fit (its CT patches read
-# gradient estimates that couple across the whole triangulation);
-# 'linear' auto-routes to the halo-tiled certified fit above 150k
-# points (cube._interp_linear_tiled), whose per-tile builds stay far
-# below this cap.
+# documented single-task ceiling: the build is expected O(n log n)
+# (~0.9 s per 100k points on one core of a 4-core host) but runs as
+# ONE task per (band, group); past this cap the fail-fast error beats
+# a silently-pinned executor. Only CUBIC still needs the single global
+# fit (its CT patches read gradient estimates that couple across the
+# whole triangulation); 'linear' auto-routes to the halo-tiled
+# certified fit above 150k points (cube._interp_linear_tiled), whose
+# per-tile builds stay far below this cap.
 DELAUNAY_MAX_POINTS = 2_000_000
+
+# Relative margin on both fp predicates, about 1000 times their
+# rounding-error bound. An edge flips only when its in-circle
+# determinant clears this share of its permanent, so exact or near
+# ties (the four corners of a grid cell) keep either diagonal instead
+# of flipping back and forth; a flip also needs both new triangles
+# CCW by the same margin.
+_EPS = 1e-12
+# flips per point before the build gives up on the input
+_FLIPS_PER_POINT = 32
 
 
 def delaunay(points: np.ndarray) -> np.ndarray:
-    """Return (M, 3) int array of triangle vertex indices.
+    """Return (M, 3) int array of CCW triangle vertex indices.
 
-    points: (N, 2) float array, N >= 3. Degenerate (all-collinear)
-    inputs return an empty triangle list.
+    points: (N, 2) float array. Exact duplicate points collapse to
+    their first occurrence; fewer than 3 distinct points or an
+    all-collinear input return an empty triangle list.
 
-    Two builds share the same super-triangle and in-circle tolerance:
-
-    * n <= _BFS_THRESHOLD: Bowyer-Watson with the per-insertion
-      circumcircle scan fully vectorized over the live triangle arrays
-      (the former dict/list form cost ~1 s at n=1000; this is
-      ~milliseconds). Insertion order (0..n-1) matches the original
-      implementation, so co-circular tie-breaks are stable.
-    * larger n: adjacency-walk Bowyer-Watson — locate the containing
-      triangle by a visibility walk from the previous insertion, grow
-      the cavity by BFS over triangle neighbors, retriangulate the
-      boundary fan. Insertions go in Morton (Z-curve) order so the
-      walk starts adjacent to its target: expected O(1) steps per
-      insertion, O(n) overall vs the scan's O(n^2). In general
-      position both builds produce THE Delaunay triangulation; they
-      can differ only on exactly co-circular quadruples (where any
-      diagonal is valid).
+    Batch-parallel incremental insertion with Lawson flips, every step
+    a whole-array numpy operation: starting from one super-triangle,
+    each round inserts one pending point into EVERY triangle that
+    holds one (a 1->3 split), relocates the other pending points by
+    orientation tests against the new spokes, then flips the edges
+    that fail the in-circle test in independent batches (each triangle
+    in at most one flip per batch) until none is left. Points go in a
+    fixed-seed random order, so the result is a deterministic function
+    of the input and takes O(log n) rounds. In general position the
+    output is THE Delaunay triangulation, covering the convex hull; on
+    exactly co-circular quadruples either diagonal may be kept. Inputs
+    too near-degenerate for the fp predicates raise a "near-degenerate"
+    ValueError.
     """
     pts = np.asarray(points, dtype=np.float64)
     n = len(pts)
@@ -97,91 +103,276 @@ def delaunay(points: np.ndarray) -> np.ndarray:
         raise ValueError(
             f"{n} scatter points exceed the single-task Delaunay cap "
             f"of {DELAUNAY_MAX_POINTS} (the triangulation is fitted "
-            "once per band; ~7 s per 100k points in one task). "
+            "once per band; ~0.9 s per 100k points in one task). "
             "Subsample the input, or use method='nearest' (scales to "
             "any point count) or a burn + interpolate_na pipeline."
         )
+    empty = np.empty((0, 3), dtype=np.int64)
     if n < 3:
-        return np.empty((0, 3), dtype=np.int64)
-    if n > _BFS_THRESHOLD:
-        return _check_build(_delaunay_walk(pts), n)
+        return empty
+    # + 0.0 folds -0.0 into 0.0 so equal coordinates compare equal
+    _, first = np.unique(pts + 0.0, axis=0, return_index=True)
+    keep = np.sort(first)
+    upts = pts[keep]
+    d = upts - upts[0]
+    far = d[np.argmax(np.abs(d).sum(axis=1))]
+    if len(upts) < 3 or not (far[0] * d[:, 1] - far[1] * d[:, 0]).any():
+        return empty
+    return _check_build(keep[_flip_build(upts)], n)
 
-    # super-triangle containing all points
-    cx, cy = pts.mean(axis=0)
-    span = max(pts[:, 0].ptp(), pts[:, 1].ptp(), 1e-12) * 100.0
-    st = np.array(
-        [[cx - 20 * span, cy - span], [cx, cy + 20 * span], [cx + 20 * span, cy - span]]
-    )
-    allp = np.vstack([pts, st])
 
-    cap = 4 * n + 16
-    tv = np.empty((cap, 3), dtype=np.int64)     # triangle vertices
-    ccx = np.empty(cap, dtype=np.float64)       # circumcenter x
-    ccy = np.empty(cap, dtype=np.float64)       # circumcenter y
-    cr2 = np.empty(cap, dtype=np.float64)       # circumradius^2
-    alive = np.zeros(cap, dtype=bool)
+def _orient(x, y, a, b, c):
+    """Orientation determinant of (a, b, c) (> 0: CCW) and its
+    permanent (the sum of the absolute products)."""
+    abx, aby = x[b] - x[a], y[b] - y[a]
+    acx, acy = x[c] - x[a], y[c] - y[a]
+    lt, rt = abx * acy, aby * acx
+    return lt - rt, np.abs(lt) + np.abs(rt)
 
-    tv[0] = (n, n + 1, n + 2)
-    ux0, uy0, r20 = _batch_circum(allp, tv[:1])
-    ccx[0], ccy[0], cr2[0] = ux0[0], uy0[0], r20[0]
-    alive[0] = True
+
+def _ccw(x, y, a, b, c):
+    """Mask of triangles (a, b, c) that are CCW beyond fp doubt."""
+    o, perm = _orient(x, y, a, b, c)
+    return o > _EPS * perm
+
+
+def _incircle(x, y, a, b, c, d):
+    """In-circle determinant (> 0: d strictly inside the circle of the
+    CCW triangle a, b, c) and its permanent."""
+    adx, ady = x[a] - x[d], y[a] - y[d]
+    bdx, bdy = x[b] - x[d], y[b] - y[d]
+    cdx, cdy = x[c] - x[d], y[c] - y[d]
+    ad = adx * adx + ady * ady
+    bd = bdx * bdx + bdy * bdy
+    cd = cdx * cdx + cdy * cdy
+    p1, q1 = bdx * cdy, bdy * cdx
+    p2, q2 = cdx * ady, cdy * adx
+    p3, q3 = adx * bdy, ady * bdx
+    det = ad * (p1 - q1) + bd * (p2 - q2) + cd * (p3 - q3)
+    perm = (ad * (np.abs(p1) + np.abs(q1)) + bd * (np.abs(p2) + np.abs(q2))
+            + cd * (np.abs(p3) + np.abs(q3)))
+    return det, perm
+
+
+def _slot_of(nb, w, t):
+    """Slot of each triangle ``w`` whose neighbour is ``t``."""
+    return np.argmax(nb[w] == t[:, None], axis=1)
+
+
+def _flip_build(p: np.ndarray) -> np.ndarray:
+    """Delaunay triangles of distinct, not-all-collinear points ``p``
+    (see ``delaunay``).
+
+    Triangle ``t`` is ``tv[t]`` (CCW); ``nb[t, k]`` is the triangle
+    across the edge opposite vertex ``tv[t, k]`` (-1 on the
+    super-triangle's rim). Every pending point ``pend[i]`` lies in
+    triangle ``loc[i]``.
+    """
+    m = len(p)
+    cx, cy = p.mean(axis=0)
+    span = max(np.ptp(p[:, 0]), np.ptp(p[:, 1]), 1e-12) * 100.0
+    x = np.concatenate([p[:, 0], [cx - 20 * span, cx + 20 * span, cx]])
+    y = np.concatenate([p[:, 1], [cy - span, cy - span, cy + 20 * span]])
+
+    cap = 2 * m + 1            # triangle count once every point is in
+    tv = np.empty((cap, 3), dtype=np.int64)
+    nb = np.full((cap, 3), -1, dtype=np.int64)
+    tv[0] = (m, m + 1, m + 2)
     ntri = 1
-    ekey_base = n + 3
+    owner = np.empty((cap, 3), dtype=np.int64)   # per split/flip batch
+    mark = np.full(cap, -1, dtype=np.int64)      # batch index, or -1
+    pend = np.random.default_rng(0).permutation(m)
+    loc = np.zeros(m, dtype=np.int64)
+    budget = _FLIPS_PER_POINT * m + 64
 
-    for i in range(n):
-        px, py = allp[i]
-        d2 = (px - ccx[:ntri]) ** 2 + (py - ccy[:ntri]) ** 2
-        bad = np.flatnonzero(alive[:ntri] & (d2 <= cr2[:ntri] * (1 + 1e-12)))
-        if len(bad) == 0:
-            continue
-        bt = tv[bad]
-        e = np.concatenate([bt[:, [0, 1]], bt[:, [1, 2]], bt[:, [2, 0]]])
-        e.sort(axis=1)
-        key = e[:, 0] * ekey_base + e[:, 1]
-        uniq, counts = np.unique(key, return_counts=True)
-        single = uniq[counts == 1]      # boundary polygon edges
-        alive[bad] = False
-        nb = len(single)
-        if nb == 0:
-            continue
-        if ntri + nb > cap:
-            # compact dead slots (amortized; live count is ~2n bounded)
-            live = np.flatnonzero(alive[:ntri])
-            m = len(live)
-            tv[:m] = tv[live]
-            ccx[:m] = ccx[live]
-            ccy[:m] = ccy[live]
-            cr2[:m] = cr2[live]
-            alive[:ntri] = False
-            alive[:m] = True
-            ntri = m
-            if ntri + nb > cap:
-                cap = max(2 * cap, ntri + nb + 16)
-                tv = np.resize(tv, (cap, 3))
-                ccx = np.resize(ccx, cap)
-                ccy = np.resize(ccy, cap)
-                cr2 = np.resize(cr2, cap)
-                alive = np.resize(alive, cap)
-                alive[ntri:] = False
-        new = np.empty((nb, 3), dtype=np.int64)
-        new[:, 0] = single // ekey_base
-        new[:, 1] = single % ekey_base
-        new[:, 2] = i
-        sl = slice(ntri, ntri + nb)
-        tv[sl] = new
-        ux, uy, r2 = _batch_circum(allp, new)
-        ccx[sl] = ux
-        ccy[sl] = uy
-        cr2[sl] = r2
-        alive[sl] = True
-        ntri += nb
+    while len(pend):
+        # split: the first pending point (insertion order) of each
+        # triangle holding one goes in, 1 -> 3
+        npend = len(pend)
+        head = np.full(ntri, npend)
+        np.minimum.at(head, loc, np.arange(npend))
+        t = np.flatnonzero(head < npend)
+        ip = head[t]
+        # a point on (or within fp doubt of) an edge waits a round when
+        # the triangle across that edge takes an earlier point now: two
+        # flat triangles facing each other across one edge could block
+        # each other's flip
+        v = tv[t]
+        onedge = np.column_stack([
+            ~_ccw(x, y, v[:, (j + 1) % 3], v[:, (j + 2) % 3], pend[ip])
+            for j in range(3)])
+        if onedge.any():
+            head[head == npend] = -1
+            across = head[nb[t]]
+            go = ~(onedge & (nb[t] >= 0) & (across >= 0)
+                   & (across < ip[:, None])).any(axis=1)
+            t, ip, v = t[go], ip[go], v[go]
+        q = pend[ip]
+        k = len(t)
+        t1 = np.arange(ntri, ntri + k)
+        t2 = t1 + k
+        ntri += 2 * k
+        # kid j = (v[j+1], v[j+2], q) keeps old edge j
+        kids = np.column_stack([t, t1, t2])
+        mark[t] = np.arange(k)
+        owner[t] = kids
+        outer = _rewire(nb, mark, owner, np.repeat(t, 3),
+                        np.tile(np.arange(3), k), kids.ravel()).reshape(k, 3)
+        for j in range(3):
+            j1, j2 = (j + 1) % 3, (j + 2) % 3
+            tv[kids[:, j]] = np.column_stack([v[:, j1], v[:, j2], q])
+            nb[kids[:, j]] = np.column_stack(
+                [kids[:, j1], kids[:, j2], outer[:, j]])
 
-    live = np.flatnonzero(alive[:ntri])
-    out = tv[live]
-    out = out[(out < n).all(axis=1)]
-    if not len(out):
-        return np.empty((0, 3), np.int64)
-    return _check_build(out, n)
+        rest = np.ones(npend, dtype=bool)
+        rest[ip] = False
+        pend, loc = pend[rest], loc[rest]
+        s = mark[loc]
+        mv = np.flatnonzero(s >= 0)
+        mark[t] = -1
+        if len(mv):
+            # closed-sector tests against the spokes q -> v0, v1, v2
+            s, w = s[mv], pend[mv]
+            o = [_orient(x, y, q[s], v[s, j], w)[0] for j in range(3)]
+            loc[mv] = np.where(
+                (o[1] >= 0) & (o[2] <= 0), t[s],
+                np.where((o[2] >= 0) & (o[0] <= 0), t1[s], t2[s]))
+
+        dirty = np.concatenate([t, t1, t2])
+        while len(dirty):
+            dirty, budget = _flip_batch(x, y, tv, nb, owner, mark, dirty,
+                                        pend, loc, budget, cap)
+
+    # every triangle CCW beyond doubt (the super-triangle's included)
+    # means the mesh tiles the super-triangle: a valid triangulation
+    if not _ccw(x, y, tv[:, 0], tv[:, 1], tv[:, 2]).all():
+        raise ValueError(_degenerate(
+            "Delaunay build left flat or inverted triangles"))
+    return tv[(tv < m).all(axis=1)]
+
+
+def _rewire(nb, mark, owner, old, slot, new):
+    """Neighbour pointers across the outer edges of a batch of split or
+    flipped triangles (``mark >= 0`` on them).
+
+    Edge ``slot`` of pre-batch triangle ``old`` ends up in triangle
+    ``new``. Returns the triangle now across each such edge (-1 on the
+    rim) and points unchanged neighbours back at ``new``; a neighbour
+    that changes in the same batch is resolved through ``owner`` (its
+    slot -> the triangle that keeps that edge). Reads ``nb`` before it
+    writes, so call it before the batch's own rows are rewritten.
+    """
+    w = nb[old, slot]
+    out = np.full(len(old), -1, dtype=np.int64)
+    has = np.flatnonzero(w >= 0)
+    w, old, new = w[has], old[has], new[has]
+    sw = _slot_of(nb, w, old)
+    moved = mark[w] >= 0
+    out[has] = np.where(moved, owner[w, sw], w)
+    still = ~moved
+    nb[w[still], sw[still]] = new[still]
+    return out
+
+
+def _flip_batch(x, y, tv, nb, owner, mark, dirty, pend, loc, budget,
+                cap):
+    """One batch of Lawson flips over the edges of ``dirty`` triangles.
+    Returns the triangles the batch rewrote (the next dirty set) and
+    the remaining flip budget."""
+    lo = np.repeat(dirty, 3)
+    hi = nb[dirty].ravel()
+    ok = hi >= 0
+    lo, hi = lo[ok], hi[ok]
+    key = np.unique(np.minimum(lo, hi) * cap + np.maximum(lo, hi))
+    lo, hi = key // cap, key % cap
+    kl = _slot_of(nb, lo, hi)
+    kh = _slot_of(nb, hi, lo)
+    # lo = (c, a, b) and hi = (d, b, a) share edge (a, b)
+    c = tv[lo, kl]
+    a = tv[lo, (kl + 1) % 3]
+    b = tv[lo, (kl + 2) % 3]
+    d = tv[hi, kh]
+    det, perm = _incircle(x, y, c, a, b, d)
+    f = det > _EPS * perm
+    # the super-triangle's corners count as infinitely far: a real
+    # edge never flips towards one (a finite corner could sit inside a
+    # hull sliver's huge circumcircle and drop a hull edge), and an
+    # edge from one to a real point flips whenever the real triangle
+    # it makes is valid
+    sup = len(x) - 3
+    sa, sb, scd = a >= sup, b >= sup, (c >= sup) | (d >= sup)
+    f = np.where(scd, f & (sa | sb), np.where(sa ^ sb, True, f))
+    # a split on (or within fp noise of) an edge leaves a flat
+    # triangle; it flips whenever the flip is valid, whatever the
+    # in-circle test says (the guard below keeps flips from making one)
+    f |= ~_ccw(x, y, c, a, b) | ~_ccw(x, y, d, b, a)
+    if f.any():
+        # the flip must leave two CCW triangles (c, a, d) and (d, b, c)
+        i = np.flatnonzero(f)
+        f[i] = _ccw(x, y, c[i], a[i], d[i]) & _ccw(x, y, d[i], b[i], c[i])
+    i = np.flatnonzero(f)
+    if not len(i):
+        return i, budget
+    lo, hi, kl, kh, a, b, c, d = (
+        arr[i] for arr in (lo, hi, kl, kh, a, b, c, d))
+    # independent set: keep a flip when it has the smallest priority
+    # of both its triangles' candidates; the priority scrambles the
+    # edge key (an odd multiplier is a bijection mod 2**64), so a run
+    # of adjacent candidates does not resolve one flip per batch
+    touched = np.concatenate([lo, hi])
+    pri = key[i].astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    first = np.full(cap, np.iinfo(np.uint64).max, dtype=np.uint64)
+    np.minimum.at(first, lo, pri)
+    np.minimum.at(first, hi, pri)
+    i = np.flatnonzero((first[lo] == pri) & (first[hi] == pri))
+    lo, hi, kl, kh, a, b, c, d = (
+        arr[i] for arr in (lo, hi, kl, kh, a, b, c, d))
+    nf = len(lo)
+    budget -= nf
+    if budget < 0:
+        raise ValueError(_degenerate(
+            "Delaunay flip loop exceeded its budget of "
+            f"{_FLIPS_PER_POINT} flips per point"))
+    # after the flip lo = (c, a, d) and hi = (d, b, c); the outer edges
+    # b-c, c-a (of lo) and a-d, d-b (of hi) move as follows
+    la, lb = (kl + 1) % 3, (kl + 2) % 3
+    ha, hb = (kh + 1) % 3, (kh + 2) % 3
+    batch = np.arange(nf)
+    mark[lo] = batch
+    mark[hi] = batch
+    owner[lo, la] = hi
+    owner[lo, lb] = lo
+    owner[hi, ha] = lo
+    owner[hi, hb] = hi
+    old = np.concatenate([lo, lo, hi, hi])
+    slot = np.concatenate([la, lb, ha, hb])
+    out = _rewire(nb, mark, owner, old, slot, owner[old, slot])
+    bc, ca, ad, db = out.reshape(4, nf)
+    tv[lo] = np.column_stack([c, a, d])
+    tv[hi] = np.column_stack([d, b, c])
+    nb[lo] = np.column_stack([ad, hi, ca])
+    nb[hi] = np.column_stack([bc, lo, db])
+    # pending points in a flipped pair: (c, a, d) lies right of c -> d
+    s = mark[loc]
+    mv = np.flatnonzero(s >= 0)
+    mark[lo] = -1
+    mark[hi] = -1
+    if len(mv):
+        s = s[mv]
+        o = _orient(x, y, c[s], d[s], pend[mv])[0]
+        loc[mv] = np.where(o < 0, lo[s], hi[s])
+    # every candidate's pair is checked again: a candidate that lost
+    # the independent-set draw may still need its flip
+    return np.unique(touched), budget
+
+
+def _degenerate(what: str) -> str:
+    return (
+        f"{what}: the point set is adversarially near-degenerate for "
+        "the floating-point predicates (e.g. all points within fp "
+        "jitter of one line). Jitter or rescale the coordinates, or "
+        "use method='nearest'."
+    )
 
 
 def _check_build(tris: np.ndarray, n: int) -> np.ndarray:
@@ -346,158 +537,6 @@ def _ct_eval(coeffs, a, b, m):
         + 3 * a * a * m * b201 + 3 * b * b * m * b021
         + 3 * a * m * m * b102 + 3 * b * m * m * b012
         + 6 * a * b * m * b111
-    )
-
-
-def _morton_argsort(pts: np.ndarray) -> np.ndarray:
-    """Z-curve ordering of points (16-bit grid): successive points are
-    spatial neighbors, so the locate-walk starts next to its target."""
-    x, y = pts[:, 0], pts[:, 1]
-    sx = x.ptp() or 1.0
-    sy = y.ptp() or 1.0
-    nx = ((x - x.min()) / sx * 65535.0).astype(np.uint64)
-    ny = ((y - y.min()) / sy * 65535.0).astype(np.uint64)
-
-    def spread(v):
-        v = (v | (v << 8)) & np.uint64(0x00FF00FF)
-        v = (v | (v << 4)) & np.uint64(0x0F0F0F0F)
-        v = (v | (v << 2)) & np.uint64(0x33333333)
-        v = (v | (v << 1)) & np.uint64(0x55555555)
-        return v
-
-    code = (spread(nx) << np.uint64(1)) | spread(ny)
-    return np.argsort(code, kind="stable")
-
-
-def _delaunay_walk(pts: np.ndarray) -> np.ndarray:
-    """Adjacency-walk Bowyer-Watson (see ``delaunay`` docstring).
-
-    Pure-Python scalar hot loop (lists of floats beat numpy scalars at
-    per-insertion granularity); expected O(1) walk + O(cavity) update
-    per insertion with Morton-ordered input.
-    """
-    n = len(pts)
-    cx, cy = pts.mean(axis=0)
-    span = max(pts[:, 0].ptp(), pts[:, 1].ptp(), 1e-12) * 100.0
-    px = pts[:, 0].tolist() + [cx - 20 * span, cx, cx + 20 * span]
-    py = pts[:, 1].tolist() + [cy - span, cy + 20 * span, cy - span]
-
-    def circum(a, b, c):
-        ax, ay, bx, by, cxx, cyy = px[a], py[a], px[b], py[b], px[c], py[c]
-        d = 2 * (ax * (by - cyy) + bx * (cyy - ay) + cxx * (ay - by))
-        if d == 0:
-            return (float("inf"), float("inf"), -1.0)
-        a2 = ax * ax + ay * ay
-        b2 = bx * bx + by * by
-        c2 = cxx * cxx + cyy * cyy
-        ux = (a2 * (by - cyy) + b2 * (cyy - ay) + c2 * (ay - by)) / d
-        uy = (a2 * (cxx - bx) + b2 * (ax - cxx) + c2 * (bx - ax)) / d
-        r2 = (ax - ux) ** 2 + (ay - uy) ** 2
-        return (ux, uy, r2)
-
-    tv = [(n, n + 1, n + 2)]
-    nbr = [[-1, -1, -1]]
-    cc = [circum(n, n + 1, n + 2)]
-    alive = [True]
-    last = 0
-
-    def in_circle(t, x, y):
-        ux, uy, r2 = cc[t]
-        return (x - ux) ** 2 + (y - uy) ** 2 <= r2 * (1 + 1e-12)
-
-    def locate(x, y, start):
-        cur = start
-        prev = -1
-        for _ in range(4 * (len(tv) + 4)):
-            a, b, c = tv[cur]
-            vs = (a, b, c)
-            moved = False
-            for k in range(3):
-                u, v = vs[k], vs[(k + 1) % 3]
-                w = vs[(k + 2) % 3]
-                nx_t = nbr[cur][k]
-                if nx_t == prev or nx_t == -1:
-                    continue
-                ex, ey = px[v] - px[u], py[v] - py[u]
-                sp = ex * (y - py[u]) - ey * (x - px[u])
-                sw = ex * (py[w] - py[u]) - ey * (px[w] - px[u])
-                if sp * sw < 0:
-                    prev = cur
-                    cur = nx_t
-                    moved = True
-                    break
-            if not moved:
-                return cur
-        # walk failed (degenerate loop): linear fallback
-        for t in range(len(tv)):
-            if alive[t] and in_circle(t, x, y):
-                return t
-        return cur
-
-    order = _morton_argsort(pts)
-    for i in order.tolist():
-        x, y = px[i], py[i]
-        seed = locate(x, y, last)
-        # cavity: BFS over neighbors; the containing triangle is always
-        # included (p inside a triangle is inside its circumcircle,
-        # modulo degeneracy, where we force-include it)
-        bad = {seed}
-        stack = [seed]
-        while stack:
-            t = stack.pop()
-            for o in nbr[t]:
-                if o != -1 and o not in bad and in_circle(o, x, y):
-                    bad.add(o)
-                    stack.append(o)
-        # directed boundary edges of the cavity
-        boundary = []   # (u, v, outside)
-        for t in bad:
-            a, b, c = tv[t]
-            vs = (a, b, c)
-            for k in range(3):
-                o = nbr[t][k]
-                if o == -1 or o not in bad:
-                    boundary.append((vs[k], vs[(k + 1) % 3], o))
-        for t in bad:
-            alive[t] = False
-        # fan: one new triangle (u, v, i) per boundary edge
-        base = len(tv)
-        by_first = {}
-        for j, (u, v, o) in enumerate(boundary):
-            tv.append((u, v, i))
-            nbr.append([o, -1, -1])
-            cc.append(circum(u, v, i))
-            alive.append(True)
-            by_first[u] = base + j
-            if o != -1:
-                # fix the outside triangle's back pointer
-                ov = tv[o]
-                for k in range(3):
-                    if (ov[k] == v and ov[(k + 1) % 3] == u) or (
-                        ov[k] == u and ov[(k + 1) % 3] == v
-                    ):
-                        nbr[o][k] = base + j
-                        break
-        for j, (u, v, o) in enumerate(boundary):
-            t = base + j
-            # edge 1 = (v, i): neighbor is the fan triangle starting at v
-            # edge 2 = (i, u): neighbor is the fan triangle ending at u
-            nbr[t][1] = by_first.get(v, -1)
-        for j, (u, v, o) in enumerate(boundary):
-            t = base + j
-            other = nbr[t][1]
-            if other != -1:
-                nbr[other][2] = t
-        last = base if boundary else last
-
-    out = [
-        t for k, t in enumerate(tv)
-        if alive[k] and t[0] < n and t[1] < n and t[2] < n
-    ]
-    return (
-        np.asarray(out, dtype=np.int64)
-        if out
-        else np.empty((0, 3), np.int64)
     )
 
 

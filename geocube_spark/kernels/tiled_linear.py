@@ -36,10 +36,12 @@ point (R = the whole plane), where the local fit IS the global fit
 termination with global-exact values is unconditional.
 
 Floating-point note: a certified triangle is the same three physical
-points in both fits, but the stored vertex ORDER may differ between
-the local and global builds, so barycentric weights can differ in the
-last ulp (values agree to ~1e-15 relative; the parity tests pin
-1e-12). The NaN pattern is bitwise identical.
+points in both fits, but the local and global builds insert different
+point sets in a different order, so its stored vertex ORDER (and its
+index in the triangle list, which breaks locate ties on shared edges)
+may differ and barycentric weights can differ in the last ulp (values
+agree to ~1e-15 relative; the parity tests pin 1e-12). The NaN
+pattern is bitwise identical.
 """
 
 from __future__ import annotations
@@ -164,8 +166,8 @@ def tile_linear_certified(px, py, vals, gx, gy, rect, hull, *,
     try:
         tri = Triangulation(np.column_stack([px, py]), vals)
     except ValueError:
-        # near-degenerate LOCAL subset broke the fp in-circle
-        # predicate (delaunay._check_build): stay uncertified so the
+        # near-degenerate LOCAL subset broke the fp predicates
+        # (delaunay's "near-degenerate" error): stay uncertified so the
         # halo grows — a wider subset may be buildable; if the WHOLE
         # band is degenerate the final full-gather round re-raises,
         # matching the global fit's error exactly

@@ -429,60 +429,192 @@ def test_bucket_nearest_matches_bruteforce():
     assert (got == 0).all()    # lowest index wins every tie
 
 
-def test_delaunay_walk_matches_scan():
-    """The adjacency-walk build (large-n path) produces the identical
-    triangulation as the vectorized-scan build on general-position
-    inputs, and survives degenerate inputs without crashing."""
-    from geocube_spark.kernels import delaunay as D
+def _incircle(a, b, c, d):
+    """In-circle determinant (> 0: d strictly inside the circle of the
+    CCW triangle a, b, c; rows are points) and its permanent."""
+    ax, ay = a[:, 0] - d[:, 0], a[:, 1] - d[:, 1]
+    bx, by = b[:, 0] - d[:, 0], b[:, 1] - d[:, 1]
+    cx, cy = c[:, 0] - d[:, 0], c[:, 1] - d[:, 1]
+    al, bl, cl = ax * ax + ay * ay, bx * bx + by * by, cx * cx + cy * cy
+    det = (al * (bx * cy - by * cx) + bl * (cx * ay - cy * ax)
+           + cl * (ax * by - ay * bx))
+    perm = (al * (abs(bx * cy) + abs(by * cx))
+            + bl * (abs(cx * ay) + abs(cy * ax))
+            + cl * (abs(ax * by) + abs(ay * bx)))
+    return det, perm
+
+
+def _assert_delaunay(pts, tris):
+    """Delaunay-lemma certificate for ``tris`` over distinct ``pts``:
+    a valid triangulation of the convex hull (every triangle CCW with
+    positive area, areas summing to the hull's, every edge shared by at
+    most two triangles in opposite directions, boundary edges as long
+    as the hull's perimeter, every point a vertex) that is locally
+    Delaunay at every interior edge (no opposite vertex strictly
+    inside the neighbour's circumcircle) is THE Delaunay triangulation
+    up to co-circular ties."""
+    from geocube_spark.geometry.simplify import convex_hull
+
+    a, b, c = pts[tris[:, 0]], pts[tris[:, 1]], pts[tris[:, 2]]
+    area2 = ((b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1])
+             - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0]))
+    assert (area2 > 0).all()
+    hull = convex_hull(pts[:, 0], pts[:, 1])
+    hx, hy = hull[:, 0], hull[:, 1]
+    hull2 = (hx * np.roll(hy, -1) - np.roll(hx, -1) * hy).sum()
+    assert abs(area2.sum() - hull2) <= 1e-9 * hull2
+    assert np.array_equal(np.unique(tris), np.arange(len(pts)))
+    e = np.concatenate([tris[:, [0, 1]], tris[:, [1, 2]], tris[:, [2, 0]]])
+    opp = np.concatenate([tris[:, 2], tris[:, 0], tris[:, 1]])
+    assert len(np.unique(e, axis=0)) == len(e)   # no edge twice one way
+    _, inv, cnt = np.unique(np.sort(e, axis=1), axis=0,
+                            return_inverse=True, return_counts=True)
+    inv = inv.ravel()
+    assert cnt.max() <= 2
+    rim = e[cnt[inv] == 1]
+    rim_len = np.hypot(*(pts[rim[:, 1]] - pts[rim[:, 0]]).T).sum()
+    hull_len = np.hypot(np.roll(hx, -1) - hx, np.roll(hy, -1) - hy).sum()
+    assert abs(rim_len - hull_len) <= 1e-9 * hull_len
+    order = np.argsort(inv, kind="stable")
+    pair = order[np.flatnonzero(np.diff(inv[order]) == 0)]
+    first, second = pair, order[np.searchsorted(inv[order], inv[pair]) + 1]
+    t = np.concatenate([first, second]) % len(tris)
+    o = np.concatenate([opp[second], opp[first]])
+    det, perm = _incircle(pts[tris[t, 0]], pts[tris[t, 1]],
+                          pts[tris[t, 2]], pts[o])
+    assert (det <= 1e-12 * perm).all()
+
+
+def _clustered(rng, n):
+    centers = rng.rand(max(1, n // 500), 2) * 100
+    return (centers[rng.randint(0, len(centers), n)]
+            + rng.randn(n, 2) * 0.5)
+
+
+def test_delaunay_matches_brute_force():
+    """At small n in general position the build returns exactly the
+    triples whose circumcircle holds no other point — the same rule as
+    the SQL oracle's, enumerated over every triple."""
+    from itertools import combinations
+
+    from geocube_spark.kernels.delaunay import delaunay
 
     rng = np.random.RandomState(21)
-    for n in (300, 1500):
-        pts = rng.rand(n, 2) * 100
-        a = set(map(tuple, np.sort(D.delaunay(pts), axis=1)))
-        b = set(map(tuple, np.sort(D._delaunay_walk(pts), axis=1)))
-        assert a == b
-    # clustered duplicates and exact collinearity: no crash; collinear
-    # input yields only zero-area triangles in both builds (harmless —
-    # interpolation skips det==0 triangles), counts may differ on ties
-    dup = np.repeat(rng.rand(40, 2) * 10, 50, axis=0)
-    D._delaunay_walk(dup)
-    col = np.column_stack([np.linspace(0, 1, 400), np.zeros(400)])
-    for tris in (D._delaunay_walk(col), D.delaunay(col)):
-        if len(tris):
-            p = col[tris]
-            area = (p[:, 1, 0] - p[:, 0, 0]) * (p[:, 2, 1] - p[:, 0, 1]) - (
-                p[:, 2, 0] - p[:, 0, 0]
-            ) * (p[:, 1, 1] - p[:, 0, 1])
-            assert np.abs(area).max() == 0.0
+    for n in (3, 4, 9, 25, 60):
+        for pts in (rng.rand(n, 2) * 100, _clustered(rng, n)):
+            i, j, k = np.array(list(combinations(range(n), 3))).T
+            a, b, c = pts[i], pts[j], pts[k]
+            o = ((b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1])
+                 - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0]))
+            keep = o != 0
+            i, j, k, o = i[keep], j[keep], k[keep], o[keep]
+            j, k = np.where(o > 0, j, k), np.where(o > 0, k, j)
+            det, perm = _incircle(
+                np.repeat(pts[i], n, 0), np.repeat(pts[j], n, 0),
+                np.repeat(pts[k], n, 0), np.tile(pts, (len(i), 1)))
+            empty = ~(det > 1e-12 * perm).reshape(len(i), n).any(axis=1)
+            want = set(map(tuple, np.sort(
+                np.column_stack([i, j, k])[empty], axis=1)))
+            got = set(map(tuple, np.sort(delaunay(pts), axis=1)))
+            assert got == want, n
 
 
-def test_delaunay_large_n_routes_to_walk():
-    """n above the threshold uses the walk build (time-bounded) and
-    holds the empty-circumcircle property on sampled triangles."""
-    from geocube_spark.kernels import delaunay as D
+def test_delaunay_certificate_uniform_and_clustered():
+    """The Delaunay-lemma certificate holds at every size, on uniform
+    and on clustered inputs, and the output is a deterministic function
+    of the input."""
+    from geocube_spark.kernels.delaunay import delaunay
 
     rng = np.random.RandomState(8)
-    n = D._BFS_THRESHOLD + 1000
-    pts = rng.rand(n, 2) * 1000
-    tris = D.delaunay(pts)
-    assert len(tris) > 1.8 * n
-    sample = tris[rng.randint(0, len(tris), 100)]
-    for t in sample:
-        a, b, c = pts[t]
-        d = 2 * (a[0] * (b[1] - c[1]) + b[0] * (c[1] - a[1])
-                 + c[0] * (a[1] - b[1]))
-        if d == 0:
-            continue
-        a2, b2, c2 = a @ a, b @ b, c @ c
-        ux = (a2 * (b[1] - c[1]) + b2 * (c[1] - a[1])
-              + c2 * (a[1] - b[1])) / d
-        uy = (a2 * (c[0] - b[0]) + b2 * (a[0] - c[0])
-              + c2 * (b[0] - a[0])) / d
-        r2 = (a[0] - ux) ** 2 + (a[1] - uy) ** 2
-        d2 = (pts[:, 0] - ux) ** 2 + (pts[:, 1] - uy) ** 2
-        inside = d2 < r2 * (1 - 1e-9)
-        inside[t] = False
-        assert not inside.any()
+    for n in (300, 1500, 30_000):
+        for pts in (rng.rand(n, 2) * 1000, _clustered(rng, n)):
+            tris = delaunay(pts)
+            _assert_delaunay(pts, tris)
+            assert np.array_equal(delaunay(pts.copy()), tris)
+
+
+def test_delaunay_duplicates_collapse_to_first_occurrence():
+    """Exact duplicates collapse to their first occurrence (-0.0 equals
+    0.0); the unique points get the full certificate."""
+    from geocube_spark.kernels.delaunay import delaunay
+
+    rng = np.random.RandomState(21)
+    base = rng.rand(40, 2) * 10
+    base[0] = (0.0, 5.0)
+    dup = np.repeat(base, 50, axis=0)
+    dup[1] = (-0.0, 5.0)
+    tris = delaunay(dup)
+    assert np.array_equal(np.unique(tris), np.arange(40) * 50)
+    _assert_delaunay(base, tris // 50)
+
+
+def test_delaunay_integer_lattice_tiles_the_cells():
+    """An exact 80 x 80 lattice (every cell co-circular) triangulates
+    into half cells: every triangle has area 0.5, there are 2n - 2 - h
+    of them (h = the 316 boundary points), and a linear interpolant on
+    a smooth field stays inside the range of each query's 4 corners."""
+    from geocube_spark.kernels.delaunay import delaunay, linear_interpolate
+
+    g = np.stack(np.meshgrid(np.arange(80.0), np.arange(80.0)), -1)
+    pts = g.reshape(-1, 2)[np.random.RandomState(3).permutation(6400)]
+    tris = delaunay(pts)
+    a, b, c = pts[tris[:, 0]], pts[tris[:, 1]], pts[tris[:, 2]]
+    area = 0.5 * ((b[:, 0] - a[:, 0]) * (c[:, 1] - a[:, 1])
+                  - (b[:, 1] - a[:, 1]) * (c[:, 0] - a[:, 0]))
+    assert (area == 0.5).all()
+    assert len(tris) == 2 * 6400 - 2 - 316
+    _assert_delaunay(pts, tris)
+
+    def f(x, y):
+        return np.sin(x / 7) * np.cos(y / 5)
+
+    h = (np.arange(79)[:, None] + np.array([0.25, 0.75])).ravel()
+    qx, qy = (v.ravel() for v in np.meshgrid(h, h))
+    got = linear_interpolate(pts, f(pts[:, 0], pts[:, 1]), qx, qy)
+    x0, y0 = np.floor(qx), np.floor(qy)
+    corners = np.stack([f(x0, y0), f(x0 + 1, y0), f(x0, y0 + 1),
+                        f(x0 + 1, y0 + 1)])
+    assert len(got) == 158 * 158
+    assert (got >= corners.min(axis=0) - 1e-12).all()
+    assert (got <= corners.max(axis=0) + 1e-12).all()
+
+
+def test_delaunay_collinear_is_empty():
+    """Exactly collinear input has no triangles, at any size."""
+    from geocube_spark.kernels.delaunay import delaunay
+
+    for n in (500, 5000):
+        x = np.linspace(0, 1, n)
+        assert delaunay(np.column_stack([x, 2 * x])).shape == (0, 3)
+        assert delaunay(np.column_stack([x, np.zeros(n)])).shape == (0, 3)
+
+
+def test_interpolate_na_triangulates_gapped_raster():
+    """interpolate_na(method='linear'|'cubic') triangulates a raster's
+    data cells: on an 80 x 80 grid with 5 % random gaps that set gets
+    the full certificate, data cells keep their values, and the linear
+    fills (convex combinations of a field bounded by 1) stay in
+    [-1, 1]."""
+    from geocube_spark.kernels.delaunay import delaunay
+    from geocube_spark.kernels.interpolate import interpolate_na
+
+    rng = np.random.RandomState(5)
+    gx, gy = np.meshgrid(np.arange(80.0), np.arange(80.0))
+    arr = np.sin(gx / 7) * np.cos(gy / 5)
+    gap = rng.rand(80, 80) < 0.05
+    arr[gap] = np.nan
+    pts = np.column_stack([gx[~gap], gy[~gap]])
+    assert len(pts) > 4096
+    _assert_delaunay(pts, delaunay(pts))
+    for method in ("linear", "cubic"):
+        out = interpolate_na(arr, np.arange(80.0), np.arange(80.0),
+                             np.nan, method=method)
+        assert np.array_equal(out[~gap], arr[~gap])
+        inside = ~np.isnan(out[gap])
+        assert inside.mean() > 0.9
+        if method == "linear":
+            vals = out[gap][inside]
+            assert (np.abs(vals) <= 1 + 1e-12).all()
 
 
 def test_batched_line_supercover_matches_fallback():
